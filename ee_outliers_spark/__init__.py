@@ -24,33 +24,48 @@ DataFrame programs:
 
 __version__ = "0.1.0"
 
+import hashlib as _hashlib
 import os as _os
 import zipfile as _zipfile
+
+
+def _pyfiles_zip() -> str:
+    """Path of this package's executor zip, built if missing. The name
+    carries a hash of every ``.py`` source, so a zip built from older or
+    other sources (a previous checkout, another tree sharing ``$TMPDIR``)
+    is never reused: driver and executors always run the same code."""
+    pkg_dir = _os.path.dirname(_os.path.abspath(__file__))
+    top = _os.path.dirname(pkg_dir)
+    sources = []
+    for root, dirs, files in _os.walk(pkg_dir):
+        dirs.sort()
+        sources += [_os.path.join(root, f) for f in sorted(files)
+                    if f.endswith(".py")]
+    h = _hashlib.sha256()
+    for full in sources:
+        h.update(_os.path.relpath(full, top).encode() + b"\0")
+        with open(full, "rb") as fh:
+            h.update(fh.read())
+    zip_path = _os.path.join(
+        _os.environ.get("TMPDIR", "/tmp"),
+        f"ee_outliers_spark_pyfiles_{h.hexdigest()[:16]}.zip")
+    if not _os.path.exists(zip_path):
+        tmp = f"{zip_path}.{_os.getpid()}.tmp"
+        with _zipfile.ZipFile(tmp, "w") as zf:
+            for full in sources:
+                zf.write(full, _os.path.relpath(full, top))
+        _os.replace(tmp, zip_path)
+    return zip_path
 
 
 def ensure_py_files(spark) -> None:
     """Make this package importable inside executor Python workers regardless
     of the driver's cwd — the local-mode equivalent of
     ``spark-submit --py-files ee_outliers_spark.zip`` (north_rule deploy
-    model). Zips the package once per session and registers it via
-    ``sc.addPyFile`` (idempotent)."""
+    model). Registers the source-keyed zip (``_pyfiles_zip``) once per
+    session via ``sc.addPyFile``."""
     sc = spark.sparkContext
     if getattr(sc, "_ee_outliers_pyfiles", False):
         return
-    pkg_dir = _os.path.dirname(_os.path.abspath(__file__))
-    zip_path = _os.path.join(
-        _os.environ.get("TMPDIR", "/tmp"), "ee_outliers_spark_pyfiles.zip"
-    )
-    if not _os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with _zipfile.ZipFile(tmp, "w") as zf:
-            for root, _dirs, files in _os.walk(pkg_dir):
-                for f in files:
-                    if not f.endswith(".py"):
-                        continue
-                    full = _os.path.join(root, f)
-                    rel = _os.path.relpath(full, _os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
-        _os.replace(tmp, zip_path)
-    sc.addPyFile(zip_path)
+    sc.addPyFile(_pyfiles_zip())
     sc._ee_outliers_pyfiles = True

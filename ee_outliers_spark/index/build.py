@@ -42,6 +42,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 import shutil
 import time
 from collections import Counter
@@ -652,11 +653,12 @@ def _with_route(df: DataFrame, num_segments: int,
 def _routed_by_segment(df: DataFrame, num_segments: int,
                        seg_offset: int = 0):
     """Exchange ``df`` so each segment occupies its own partition (1 task =
-    1 segment), then group by the routing key. Wave counts are exact
-    (num_segments is wave-aligned by auto_num_segments) and no reducer ever
-    packs 2+ segments while another sits idle — on a 1000-executor cluster
-    this is segment→reducer placement, the thing HashPartitioning alone
-    cannot guarantee."""
+    1 segment), then group by the routing key. No reducer ever packs 2+
+    segments while another sits idle — on a 1000-executor cluster this is
+    segment→reducer placement, the thing HashPartitioning alone cannot
+    guarantee. A segment count that is not a multiple of the core count
+    leaves a partial last wave (auto_num_segments sizes by need, not by
+    waves)."""
     return (_with_route(df, num_segments, seg_offset)
             .repartition(num_segments, "_route").groupBy("_route"))
 
@@ -671,68 +673,19 @@ def live_seg_ids(stats: dict) -> list[int] | None:
     return list(range(int(n))) if n else None
 
 
-class _PackedSegmentGroupBy:
-    """groupBy proxy that packs SEVERAL segments into each reduce task and
-    re-groups rows per segment inside the worker, so a many-segment index
-    (e.g. 352 live segments at 6M docs) costs cores tasks per query instead
-    of one tiny task per segment. Per-task scheduling + Arrow handshake is
-    the dominant cost of a selective query's kernel stage once per-segment
-    work is microseconds (round-6 ADVICE; measured round 7: the same query
-    over 352 one-segment tasks pays ~352 × task overhead across 11 waves).
-    The wrapped kernel still sees exactly one segment per invocation —
-    identical inputs, identical output rows."""
-
-    def __init__(self, gb, col: str):
-        self._gb = gb
-        self._col = col
-
-    def applyInPandas(self, fn, schema):
-        col = self._col
-
-        def packed(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            frames = [fn((int(s),), sub)
-                      for s, sub in pdf.groupby(col, sort=True)]
-            frames = [f for f in frames if len(f)]
-            if not frames:
-                return fn(key, pdf.iloc[0:0])
-            return pd.concat(frames, ignore_index=True)
-
-        return self._gb.applyInPandas(packed, schema)
-
-
 def routed_segment_groupby(df: DataFrame, seg_ids: list[int] | None,
-                           col: str = "seg_id", pack: bool = True):
-    """``df.groupBy("seg_id")`` with guaranteed one-segment-per-reduce-
-    partition placement (see ``_route_keys``): the per-segment query kernels
-    (WAND, phrase intersection, filter set-algebra, posting decode) each
-    process one segment per task instead of however many segments Spark's
-    hash happens to pack into ``shuffle.partitions`` buckets — on 128 live
-    segments over 32 shuffle partitions the busiest reducer otherwise packs
-    ~2× the mean and gates the whole query. Kernels must read seg_id from
-    the pdf (none of the query kernels use the group key). Falls back to the
+                           col: str = "seg_id"):
+    """``df.groupBy(col)`` with guaranteed one-segment-per-reduce-partition
+    placement (see ``_route_keys``) for the heavy per-segment kernels (LSM
+    merge: one segment IS the task's memory budget). On 128 segments over
+    32 shuffle partitions a plain hash groupBy packs ~2× the mean into the
+    busiest reducer and gates the whole stage. Kernels must read the
+    segment id from the pdf, not from the group key. Falls back to the
     plain groupBy when the live list is unknown (pre-routing index dirs).
-
-    When the live-segment count exceeds the core count and ``pack`` is
-    true (query kernels: tiny per-segment work), segments are round-robin
-    packed into exactly ``defaultParallelism`` balanced reduce tasks
-    (⌈n/p⌉ vs ⌊n/p⌋ segments per task — still deterministic placement, no
-    binomial straggler tail) and the kernel is re-invoked per segment
-    inside the task. Heavy kernels (build, LSM merge: one segment IS the
-    memory budget) pass ``pack=False`` to keep one task per segment."""
+    Query kernels do not shuffle at all — see ``segment_map``."""
     if not seg_ids:
         return df.groupBy(col)
     ids = sorted({int(s) for s in seg_ids})
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if pack and len(ids) > p:
-        routes = _route_keys(p)
-        mapping = F.create_map(*[F.lit(int(v)) for i, s in enumerate(ids)
-                                 for v in (s, routes[i % p])])
-        routed = df.withColumn(
-            "_route",
-            F.coalesce(mapping[F.col(col)],
-                       (-F.col(col) - 1).cast("int")))
-        gb = routed.repartition(p, "_route").groupBy("_route")
-        return _PackedSegmentGroupBy(gb, col)
     routes = _route_keys(len(ids))
     mapping = F.create_map(*[F.lit(int(v)) for s, r in zip(ids, routes)
                              for v in (s, r)])
@@ -741,6 +694,115 @@ def routed_segment_groupby(df: DataFrame, seg_ids: list[int] | None,
         F.coalesce(mapping[F.col(col)],
                    (-F.col(col) - 1).cast("int")))
     return routed.repartition(len(ids), "_route").groupBy("_route")
+
+
+@dataclass(frozen=True)
+class SegmentRows:
+    """Which rows and columns of each live segment a query kernel reads
+    (``segment_map``): dictionary rows whose term is in ``terms`` (a
+    ``field:`` norm sidecar is just such a term) or matches one of
+    ``patterns`` (``term_matcher`` specs), plus the doclen sidecar row
+    (term NULL — the segment's doc universe and lengths) when ``doclen``.
+    ``columns`` are read besides ``term``; a column that a segment file
+    lacks (e.g. ``block_pos_ends`` before it existed) reads as None."""
+    columns: tuple[str, ...] = ("doc_blob",)
+    terms: tuple[str, ...] = ()
+    doclen: bool = False
+    patterns: tuple = ()
+
+
+def term_matcher(spec):
+    """Predicate over dictionary term strings for one pattern-atom spec
+    (``filter._pattern_specs``): ("re", source) fullmatches, ("lev", token,
+    max_edits) is a classic Levenshtein bound, None never matches. Neither
+    ever matches a ``field:`` entry — tokens contain no ':', so a main-text
+    pattern must not expand into the per-field namespace."""
+    if spec is None:
+        return lambda t: False
+    if spec[0] == "re":
+        rx = re.compile(spec[1])
+        return lambda t: ":" not in t and rx.fullmatch(t) is not None
+    from ..queryparser import levenshtein_py
+
+    _, tok, m = spec
+    return lambda t: (":" not in t and abs(len(t) - len(tok)) <= m
+                      and levenshtein_py(t, tok) <= m)
+
+
+def _read_segment(fs, seg_dir: str, rows: SegmentRows) -> pd.DataFrame:
+    """One segment's ``rows`` as a pandas frame, read with pyarrow straight
+    from its partition directory: the term filter is a parquet dataset
+    predicate; pattern atoms first read the segment's term column and add
+    the dictionary terms their matchers accept."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    import pyarrow.fs as pafs
+
+    cols = ["term", *rows.columns]
+    files = [f.path for f in fs.get_file_info(
+                 pafs.FileSelector(seg_dir, allow_not_found=True))
+             if f.type == pafs.FileType.File
+             and f.base_name.endswith(".parquet")
+             and not f.base_name.startswith((".", "_"))]
+    if not files:
+        return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
+    data = pads.dataset(files, format="parquet", filesystem=fs)
+    terms = set(rows.terms)
+    if rows.patterns:
+        matchers = [term_matcher(s) for s in rows.patterns]
+        names = data.to_table(columns=["term"]).column("term").unique()
+        terms.update(t for t in names.to_pylist()
+                     if t is not None and any(m(t) for m in matchers))
+    pred = pc.field("term").isin(pa.array(sorted(terms), pa.string()))
+    if rows.doclen:
+        pred = pred | pc.field("term").is_null()
+    have = set(data.schema.names)
+    pdf = data.to_table(columns=[c for c in cols if c in have],
+                        filter=pred).to_pandas()
+    for c in cols:
+        if c not in have:
+            pdf[c] = None
+    return pdf
+
+
+def segment_map(spark: SparkSession, paths: IndexPaths, rows: SegmentRows,
+                kernel, schema: str) -> DataFrame:
+    """Run ``kernel(seg_id, pdf)`` once per live segment in ONE narrow
+    stage, ``pdf`` being that segment's ``rows`` — the query phase of a
+    shard, with the global merge left to the caller. A ``spark.range`` over
+    the live list is split into ``min(n_live, defaultParallelism)`` tasks
+    and each task reads its segments straight from ``seg_id=N/`` with
+    pyarrow: no parquet schema/listing job, no JVM scan stage, no routing
+    exchange. Only the commit point's live ids are read: dead directories
+    that a merge has not yet collected are never listed, and an index
+    with no committed stats has no visible segments."""
+    import pyarrow.fs as pafs
+
+    live = live_seg_ids(load_stats(paths))
+    if not live:
+        return spark.createDataFrame([], schema)
+    # a filesystem URI, or an absolute local path: executors resolve it
+    # regardless of their cwd
+    root = paths.segments
+    if "://" not in root:
+        root = os.path.abspath(root)
+
+    # named for the plan: "MapInPandas segment_stage(id)" marks an index read
+    def segment_stage(batches: Iterator[pd.DataFrame]
+                      ) -> Iterator[pd.DataFrame]:
+        fs, base = pafs.FileSystem.from_uri(root)
+        for batch in batches:
+            for i in batch["id"]:
+                seg = live[int(i)]
+                out = kernel(seg, _read_segment(
+                    fs, f"{base}/seg_id={seg}", rows))
+                if len(out):
+                    yield out
+
+    n_tasks = min(len(live), spark.sparkContext.defaultParallelism)
+    return spark.range(len(live), numPartitions=n_tasks).mapInPandas(
+        segment_stage, schema=schema)
 
 
 #: Non-positional pair-stream shape. "agg" (two exchanges): explode →
@@ -1239,8 +1301,9 @@ def auto_num_segments(spark: SparkSession, n_docs: int,
     5k-doc build 4.4-5.1 s at 2-5 segments vs 5.2-6.0 s at the 32-segment
     cores floor, and the 50k-doc build 4.4-4.5 s at 13 segments vs
     5.3-5.5 s at 32, with every query shape 10-30% faster on the smaller
-    index (fewer per-segment files; query kernels pack into `cores` reduce
-    tasks either way, so the old many-segments query argument is gone).
+    index (fewer per-segment files; a query stage runs min(segments, cores)
+    tasks either way — segment_map — so the old many-segments query
+    argument is gone).
     The floor stays ≥ the SPIMI need (smaller-than-budget segments only —
     the safe direction) and ≤ cores, so corpora past one wave are
     untouched. The cap bounds the partition-directory count for one
@@ -1260,8 +1323,8 @@ def auto_num_segments(spark: SparkSession, n_docs: int,
     # smaller segments' per-task cost is sub-linear enough that a ragged
     # extra wave of cheaper tasks beats exact waves of pricier ones. The
     # round-6 query-side argument for alignment (per-query cost linear in
-    # segment count) is gone: query kernels now pack into `cores` tasks
-    # regardless of segment count (routed_segment_groupby).
+    # segment count) is gone: a query stage runs min(segments, cores)
+    # tasks regardless of segment count (segment_map).
     return min(cap, need)
 
 

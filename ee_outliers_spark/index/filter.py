@@ -4,14 +4,21 @@ resolve against the SPIMI posting lists instead of regex-scanning the corpus.
 The reference's filter context is an ES bool query — every ``term`` clause is
 a posting-list lookup in Lucene (ref F1/F2, /root/reference/app/helpers/
 es.py:238-250, :664-710). Round 1 compiled those clauses to ``rlike`` over
-the full text column: a per-row Java regex over 100 TB. Here the plan is:
+the full text column: a per-row Java regex over 100 TB. Here every index
+read is ONE narrow Spark stage (``build.segment_map``): each task reads its
+live segments' matching dictionary rows straight from the segment
+directories with pyarrow — exact terms as a parquet predicate, wildcard /
+regexp / fuzzy atoms through the Python ``term_matcher`` specs of
+``_pattern_specs`` — and runs a per-segment kernel. Two plans use it:
 
-  ONE segments.parquet scan (the combined dictionary predicate — term IN
-  (...) ∪ wildcard/fuzzy patterns — pushed to parquet row groups)
-    → varbyte-decode the matched posting lists (Arrow batch, tiny)
-    → groupBy doc_id → both marker arrays    (one shuffle, posting-sized)
-    → left join docs on doc_id               (doc-keyed equi-join)
-    → predicate = array_contains(markers, atom key) per text atom
+- **text-only booleans** (``matching_ids``): the boolean distributes over
+  doc-disjoint segments, so each segment evaluates it as sorted doc-id set
+  algebra (the doclen sidecar is the universe for NOT / match-all) and the
+  docs table is touched only by one left-semi join. A top-level AND sends
+  its text-only conjuncts down this path too;
+- **the non-separable remainder** (field clauses mixed with text atoms
+  under OR/NOT): per-posting marker rows → groupBy doc_id → left join docs
+  on doc_id → predicate = array_contains(markers, atom key) per text atom.
 
 Multi-token (incl. sloppy) phrases resolve by positional-window
 intersection on a positional index (attach_matched_phrases); only a
@@ -34,9 +41,7 @@ from ..queryparser import (
     to_spark_predicate, wildcard_key,
 )
 from ..tokenizer import tokenize_py
-from .build import (
-    IndexPaths, live_seg_ids, read_live_segments, routed_segment_groupby,
-)
+from .build import IndexPaths, SegmentRows, segment_map, term_matcher
 from .codec import varbyte_decode
 
 MATCH_COL = "_matched_terms"
@@ -95,66 +100,43 @@ def multi_token_phrases(node) -> list[tuple[str, list[str], int]]:
     return list(out.values())
 
 
-def pattern_atoms(node) -> list[tuple[str, Column | None]]:
-    """Distinct (marker key, dictionary predicate) for Wildcard / Fuzzy /
-    Regexp atoms. A None predicate means the atom can never match a token
-    (its marker stays empty → False)."""
-    from .query import fuzzy_term_pred, regexp_term_pred, wildcard_term_pred
+def wildcard_spec(pattern: str) -> tuple | None:
+    """``term_matcher`` spec of a wildcard atom (None: never matches)."""
+    from ..queryparser import wildcard_token_body
 
-    out: dict[str, Column | None] = {}
+    body = wildcard_token_body(pattern)
+    return None if body is None else ("re", f"({body})")
 
-    def walk(n):
-        if isinstance(n, Wildcard):
-            out.setdefault(wildcard_key(n.text), wildcard_term_pred(n.text))
-        elif isinstance(n, Regexp):
-            out.setdefault(regexp_key(n.pattern),
-                           regexp_term_pred(n.pattern))
-        elif isinstance(n, Fuzzy):
-            toks = tokenize_py(n.text)
-            k = fuzzy_key(n.text, n.max_edits)
-            out.setdefault(
-                k,
-                fuzzy_term_pred(toks[0], n.max_edits)
-                if len(toks) == 1 else None)
-        elif isinstance(n, (And, Or)):
-            for p in n.parts:
-                walk(p)
-        elif isinstance(n, Not):
-            walk(n.part)
 
-    walk(node)
-    return list(out.items())
+def regexp_spec(pattern: str) -> tuple:
+    """``term_matcher`` spec of a `/regexp/` atom."""
+    from ..queryparser import regexp_token_body
+
+    return ("re", f"(?:{regexp_token_body(pattern)})")
 
 
 def posting_docs(spark: SparkSession, paths: IndexPaths,
                  terms: list[str] | None = None,
-                 term_pred: Column | None = None) -> DataFrame:
-    """(term, doc_id) for the requested terms, decoded from the compressed
-    segments. The ``term IN (...)`` filter — or an arbitrary ``term_pred``
-    over the dictionary's term strings (wildcard rlike / levenshtein bound:
-    Lucene MultiTermQuery expansion as a distributed dictionary scan) —
-    reaches the parquet scan, so only matching rows per segment are read
-    regardless of corpus size."""
-    if term_pred is None:
-        term_pred = F.col("term").isin(terms or [])
-    segs = read_live_segments(spark, paths).where(
-        term_pred & F.col("term").isNotNull()
-    ).select("term", "doc_blob")
+                 patterns: list[tuple] = ()) -> DataFrame:
+    """(term, doc_id) for the requested terms plus every dictionary term a
+    pattern-atom spec accepts (``term_matcher`` — Lucene MultiTermQuery
+    expansion per segment), decoded from the compressed segments; only
+    matching dictionary rows are read, regardless of corpus size."""
+    rows = SegmentRows(terms=tuple(terms or ()), patterns=tuple(patterns))
 
-    def decode(batches):
-        for pdf in batches:
-            ts, ds = [], []
-            for term, blob in zip(pdf["term"], pdf["doc_blob"]):
-                docs = np.cumsum(varbyte_decode(bytes(blob))).astype(np.int64)
-                ts.append(np.full(len(docs), term, dtype=object))
-                ds.append(docs)
-            if ts:
-                yield pd.DataFrame({
-                    "term": np.concatenate(ts),
-                    "doc_id": np.concatenate(ds),
-                })
+    def decode(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
+        ts, ds = [], []
+        for term, blob in zip(pdf["term"], pdf["doc_blob"]):
+            docs = np.cumsum(varbyte_decode(bytes(blob))).astype(np.int64)
+            ts.append(np.full(len(docs), term, dtype=object))
+            ds.append(docs)
+        if not ts:
+            return pdf.iloc[0:0]
+        return pd.DataFrame({"term": np.concatenate(ts),
+                             "doc_id": np.concatenate(ds)})
 
-    return segs.mapInPandas(decode, schema="term string, doc_id long")
+    return segment_map(spark, paths, rows, decode,
+                       "term string, doc_id long")
 
 
 PHRASE_COL = "_matched_phrases"
@@ -218,36 +200,38 @@ def _atom_markers(
     spark: SparkSession,
     paths: IndexPaths,
     terms: list[str],
-    patterns: list[tuple[str, Column | None]],
+    specs: dict[str, tuple | None],
 ) -> DataFrame | None:
     """(doc_id, MATCH_COL, PATTERN_COL) for every doc matching ≥1 term or
-    pattern atom — computed in ONE segment scan: the combined dictionary
-    predicate rides the parquet scan, each decoded posting row is re-tested
-    against the per-atom predicates as plain column expressions (the
+    pattern atom (``specs``: marker key → ``term_matcher`` spec) — ONE
+    segment stage: each decoded posting row carries its term (when it is a
+    query term) and the keys of the pattern atoms its term matches (the
     expansion never materializes on the driver), and a single groupBy
-    aggregates both marker arrays. None when there are no resolvable atoms."""
-    preds = [(k, p) for k, p in patterns if p is not None]
-    empty = F.array().cast("array<string>")
-    if not terms and not preds:
+    aggregates both marker arrays. None when there are no resolvable
+    atoms."""
+    matchers = [(k, term_matcher(sp)) for k, sp in specs.items()
+                if sp is not None]
+    if not terms and not matchers:
         return None
-    combined = None
-    if terms:
-        combined = F.col("term").isin(terms)
-    for _, p in preds:
-        combined = p if combined is None else combined | p
-    decoded = posting_docs(spark, paths, term_pred=combined)
-    term_hit = (F.when(F.col("term").isin(terms), F.col("term"))
-                if terms else F.lit(None).cast("string"))
-    if preds:
-        keys_arr = F.filter(
-            F.array(*[F.when(p, F.lit(k)) for k, p in preds]),
-            lambda v: v.isNotNull())
-    else:
-        keys_arr = empty
+    term_set = set(terms)
+    rows = SegmentRows(terms=tuple(terms), patterns=tuple(
+        sp for sp in specs.values() if sp is not None))
+
+    def run(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
+        parts = []
+        for term, blob in zip(pdf["term"], pdf["doc_blob"]):
+            docs = np.cumsum(varbyte_decode(bytes(blob))).astype(np.int64)
+            keys = [k for k, match in matchers if match(term)]
+            parts.append(pd.DataFrame({
+                "doc_id": docs,
+                "__tm": term if term in term_set else None,
+                "__keys": [keys] * len(docs)}))
+        return pd.concat(parts, ignore_index=True) if parts else pdf.iloc[0:0]
+
+    decoded = segment_map(spark, paths, rows, run,
+                          "doc_id long, __tm string, __keys array<string>")
     return (
-        decoded.select("doc_id", term_hit.alias("__tm"),
-                       keys_arr.alias("__keys"))
-        .groupBy("doc_id")
+        decoded.groupBy("doc_id")
         .agg(F.collect_set("__tm").alias(MATCH_COL),  # collect_set skips null
              F.array_distinct(F.flatten(F.collect_list("__keys")))
              .alias(PATTERN_COL))
@@ -260,13 +244,14 @@ def attach_matched_atoms(
     docs: DataFrame,
     doc_col: str,
     terms: list[str],
-    patterns: list[tuple[str, Column | None]],
+    specs: dict[str, tuple | None],
 ) -> DataFrame:
     """docs + MATCH_COL (which query tokens each doc contains) + PATTERN_COL
-    (which wildcard/fuzzy atom keys it matches) — one segment scan + ONE
-    doc-keyed join (empty arrays when none — never null, so NOT composes)."""
+    (which wildcard/fuzzy/regexp atom keys it matches) — one segment stage
+    + ONE doc-keyed join (empty arrays when none — never null, so NOT
+    composes)."""
     empty = F.array().cast("array<string>")
-    matched = _atom_markers(spark, paths, terms, patterns)
+    matched = _atom_markers(spark, paths, terms, specs)
     if matched is None:
         return (docs.withColumn(MATCH_COL, empty)
                     .withColumn(PATTERN_COL, empty))
@@ -291,7 +276,7 @@ def indexed_predicate(node, text_col: str, columns: list[str],
     }
     pat_markers = {
         key: F.array_contains(F.col(PATTERN_COL), key)
-        for key, _ in pattern_atoms(node)
+        for key in _pattern_specs(node)
     } or None
     ph_markers = None
     if with_phrases:
@@ -370,23 +355,18 @@ def text_only(node, positional: bool) -> bool:
 
 
 def _pattern_specs(node) -> dict[str, tuple | None]:
-    """marker key → picklable matcher spec over dictionary term strings:
-    ("re", regex_source) for wildcards, ("lev", token, max_edits) for
-    fuzzies, None when the atom can never match a token."""
-    from ..queryparser import wildcard_token_body
-
+    """marker key → ``term_matcher`` spec over dictionary term strings:
+    ("re", regex_source) for wildcards and regexps, ("lev", token,
+    max_edits) for fuzzies, None when the atom can never match a token."""
     out: dict[str, tuple | None] = {}
 
     def walk(n):
         if isinstance(n, Wildcard):
             if wildcard_key(n.text) not in out:
-                body = wildcard_token_body(n.text)
-                out[wildcard_key(n.text)] = (
-                    None if body is None else ("re", f"({body})"))
+                out[wildcard_key(n.text)] = wildcard_spec(n.text)
         elif isinstance(n, Regexp):
-            from ..queryparser import regexp_token_body
-            out.setdefault(regexp_key(n.pattern),
-                           ("re", f"(?:{regexp_token_body(n.pattern)})"))
+            if regexp_key(n.pattern) not in out:
+                out[regexp_key(n.pattern)] = regexp_spec(n.pattern)
         elif isinstance(n, Fuzzy):
             toks = tokenize_py(n.text)
             k = fuzzy_key(n.text, n.max_edits)
@@ -409,21 +389,19 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
     path (ref S2 /root/reference/app/helpers/es.py:143-158: a count query
     never fetches documents; Lucene evaluates the bool as per-segment bitset
     algebra). Segments partition the doc space, so the boolean DISTRIBUTES
-    over segments: inside one applyInPandas task the atoms become sorted
-    numpy doc-id arrays (posting lists; pattern atoms union their matching
-    dictionary rows; phrases intersect position lists; the doclen sidecar is
-    the segment's universe for NOT/match-all) and And/Or/Not are
-    intersect/union/setdiff. The plan is ONE pushed-down segment scan →
-    grouped evaluation → union of per-segment id arrays; no groupBy over
-    marker rows, no join, no docs-table access.
+    over segments: inside one ``segment_map`` kernel call the atoms become
+    sorted numpy doc-id arrays (posting lists; pattern atoms union their
+    matching dictionary rows; phrases intersect position lists; the doclen
+    sidecar is the segment's universe for NOT/match-all — read only when
+    the evaluator needs it) and And/Or/Not are intersect/union/setdiff.
+    The plan is ONE narrow segment stage → union of per-segment id arrays;
+    no exchange, no join, no docs-table access.
 
     Caller contract: ``node`` must satisfy ``text_only``; the ids are those
     of the indexed corpus (compose with a semi-join for subset inputs)."""
-    from ..queryparser import MatchAll, phrase_key  # noqa: F401 (closure)
+    from ..queryparser import MatchAll
     from .build import load_stats
-    from .query import _phrase_seg_match
-
-    from ..queryparser import MatchAll as _MatchAll
+    from .query import _lazy_plists, _phrase_seg_match
 
     stats = load_stats(paths)
     node = resolve_analyzed(node, stats.get("analyzed_fields"))
@@ -447,8 +425,7 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
                 "index (build with positions=True, or route through "
                 "indexed_filter)")
     terms = single_token_terms(node)
-    pattern_preds = pattern_atoms(node)          # scan-pushdown Columns
-    specs = _pattern_specs(node)                 # python twins for re-test
+    specs = _pattern_specs(node)
     phrases = multi_token_phrases(node) if positional else []
     ph_tokens = sorted({t for _k, toks, _s in phrases for t in toks})
     need_terms = sorted(set(terms) | set(ph_tokens))
@@ -464,7 +441,7 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
         evaluated as subtraction from the positive conjunction, so it never
         touches the universe (Lucene's ReqExcl scorer, not a complement
         bitset)."""
-        if isinstance(n, _MatchAll):
+        if isinstance(n, MatchAll):
             return not has_cand
         if isinstance(n, Not):
             return (not has_cand) or _needs_universe(n.part, True)
@@ -484,33 +461,22 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
         return False
 
     needs_universe = _needs_universe(node, False)
-    combined = None
-    if needs_universe:
-        combined = F.col("term").isNull()
-    if need_terms:
-        t_pred = F.col("term").isin(need_terms)
-        combined = t_pred if combined is None else combined | t_pred
-    for _, p in pattern_preds:
-        if p is not None:
-            combined = p if combined is None else combined | p
+    valid_specs = tuple(sp for sp in specs.values() if sp is not None)
     out_schema = "cnt long" if count_only else "doc_id long"
-    if combined is None:
+    if not (needs_universe or need_terms or valid_specs):
         # no atoms at all and no universe need: nothing can match
         return spark.createDataFrame([], out_schema)
-    cols = ["seg_id", "term", "doc_blob"]
-    live = read_live_segments(spark, paths)
-    has_bpe = False
+    cols = ("doc_blob",)
     if phrases:
-        cols += ["tf_blob", "pos_blob"]
-        has_bpe = "block_pos_ends" in live.columns
-        if has_bpe:
-            cols.append("block_pos_ends")
-    segs = live.where(combined).select(*cols)
+        cols += ("tf_blob", "pos_blob", "block_pos_ends")
+    rows = SegmentRows(columns=cols, terms=tuple(need_terms),
+                       doclen=needs_universe, patterns=valid_specs)
 
     ph_defs = [(k, toks, slop) for k, toks, slop in phrases]
     ph_token_set = set(ph_tokens)
+    matchers = {k: term_matcher(spec) for k, spec in specs.items()}
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
         empty_pdf = pd.DataFrame(
             {("cnt" if count_only else "doc_id"):
              pd.Series(dtype="int64")})
@@ -529,31 +495,11 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
                 varbyte_decode(bytes(dblob))).astype(np.int64)
         nothing = np.empty(0, dtype=np.int64)
 
-        import re as _re
-
-        from ..queryparser import levenshtein_py
-
         pat_sets: dict[str, np.ndarray] = {}
-        for k, spec in specs.items():
-            if spec is None:
-                pat_sets[k] = nothing
-            elif spec[0] == "re":
-                rx = _re.compile(spec[1])
-                # ':'-containing keys are field-qualified entries — a
-                # main-text pattern must not match them even when '.' or a
-                # negated class in the dialect could (tokens have no ':')
-                parts = [d for t, d in docsets.items()
-                         if ":" not in t and rx.fullmatch(t)]
-                pat_sets[k] = (np.unique(np.concatenate(parts))
-                               if parts else nothing)
-            else:
-                _, tok, m = spec
-                parts = [d for t, d in docsets.items()
-                         if ":" not in t
-                         and abs(len(t) - len(tok)) <= m
-                         and levenshtein_py(t, tok) <= m]
-                pat_sets[k] = (np.unique(np.concatenate(parts))
-                               if parts else nothing)
+        for k, match in matchers.items():
+            parts = [d for t, d in docsets.items() if match(t)]
+            pat_sets[k] = (np.unique(np.concatenate(parts))
+                           if parts else nothing)
 
         # phrases: positions decode LAZILY per evaluation, restricted to the
         # current candidate set — under `A AND "x y"` only candidate blocks
@@ -563,24 +509,19 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
         # under a bare OR) memoize on the phrase key.
         raw_pos: dict[str, tuple] = {}
         if ph_defs:
-            bpes = (term_rows["block_pos_ends"] if has_bpe
-                    else [None] * len(term_rows))
-            for term, dblob, tblob, pblob, bpe in zip(
-                    term_rows["term"], term_rows["doc_blob"],
-                    term_rows["tf_blob"], term_rows["pos_blob"], bpes):
+            for term, tblob, pblob, bpe in zip(
+                    term_rows["term"], term_rows["tf_blob"],
+                    term_rows["pos_blob"], term_rows["block_pos_ends"]):
                 if term in ph_token_set and pblob is not None:
                     tfs = varbyte_decode(bytes(tblob)).astype(np.int64)
                     raw_pos[term] = (
                         docsets[term], tfs, bytes(pblob),
                         None if bpe is None else np.asarray(bpe, np.int64))
 
-        from ..queryparser import phrase_key as _pk
-        from .query import _lazy_plists
-
         ph_memo: dict[str, np.ndarray] = {}
 
         def ph_eval(toks, slop, cand) -> np.ndarray:
-            k = _pk(toks, slop)
+            k = phrase_key(toks, slop)
             if cand is None and k in ph_memo:
                 return ph_memo[k]
             distinct = list(dict.fromkeys(toks))
@@ -659,8 +600,7 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
             return pd.DataFrame({"cnt": [int(ids.size)]})
         return pd.DataFrame({"doc_id": ids})
 
-    return routed_segment_groupby(
-        segs, live_seg_ids(stats)).applyInPandas(run, schema=out_schema)
+    return segment_map(spark, paths, rows, run, out_schema)
 
 
 def indexed_filter(
@@ -685,25 +625,35 @@ def indexed_filter(
     When the boolean is decidable purely from the index (``text_only``), the
     whole filter collapses to ``matching_ids`` + a left-semi join: the docs
     table contributes only its key column (Catalyst prunes the rest), the
-    way ES filter context never leaves the inverted index."""
+    way ES filter context never leaves the inverted index. A top-level AND
+    sends its text-only conjuncts down the same path (one ``matching_ids``
+    + one left-semi join) and compiles only the non-separable remainder
+    (e.g. ``doc_id:[..]``) through the marker join."""
     from .build import load_stats
 
     stats = load_stats(paths)
     # mapping consultation (ES-style): field atoms on analyzed fields
     # become index-backed FieldText atoms before any compilation
     node = resolve_analyzed(node, stats.get("analyzed_fields"))
-    if text_only(node, bool(stats.get("positions"))):
-        ids = matching_ids(spark, paths, node).withColumnRenamed(
-            "doc_id", "__mi_doc_id")
-        return docs.join(ids, docs[doc_col] == F.col("__mi_doc_id"),
+    positional = bool(stats.get("positions"))
+    parts = node.parts if isinstance(node, And) else [node]
+    indexed = [p for p in parts if text_only(p, positional)]
+    if indexed:
+        ids = matching_ids(
+            spark, paths, indexed[0] if len(indexed) == 1 else And(indexed)
+        ).withColumnRenamed("doc_id", "__mi_doc_id")
+        docs = docs.join(ids, docs[doc_col] == F.col("__mi_doc_id"),
                          "left_semi")
+        rest = [p for p in parts if not text_only(p, positional)]
+        if not rest:
+            return docs
+        node = rest[0] if len(rest) == 1 else And(rest)
 
     terms = single_token_terms(node)
-    patterns = pattern_atoms(node)
-    pat_preds = dict(patterns)
+    specs = _pattern_specs(node)
     req = required_atoms_union(node)
     if req is not None and set(req) == {("term", t) for t in terms} | {
-            ("pat", k) for k, _ in patterns}:
+            ("pat", k) for k in specs}:
         # the guarantee IS the full positive atom set: the pruning
         # semi-join would read the same posting lists the marker join
         # reads and pass docs the predicate filters anyway — one pass
@@ -713,33 +663,21 @@ def indexed_filter(
         req = None
     if req:
         req_terms = [v for kind, v in req if kind == "term"]
-        parts = []
-        if req_terms:
-            parts.append(posting_docs(spark, paths, req_terms)
-                         .select("doc_id"))
-        for kind, v in req:
-            if kind == "pat" and pat_preds.get(v) is not None:
-                parts.append(
-                    posting_docs(spark, paths, term_pred=pat_preds[v])
-                    .select("doc_id"))
-        if parts:
-            cand = parts[0]
-            for x in parts[1:]:
-                cand = cand.unionByName(x)
-            cand = cand.select(
+        req_specs = [specs[v] for kind, v in req
+                     if kind == "pat" and specs.get(v) is not None]
+        if req_terms or req_specs:
+            cand = posting_docs(spark, paths, req_terms, req_specs).select(
                 F.col("doc_id").alias("__req_doc_id")).distinct()
             docs = docs.join(
                 cand, docs[doc_col] == F.col("__req_doc_id"), "left_semi")
         else:
             # every guaranteed atom matches nothing → no doc can match
             docs = docs.where(F.lit(False))
-    marked = attach_matched_atoms(spark, paths, docs, doc_col, terms,
-                                  patterns)
-    with_phrases = bool(load_stats(paths).get("positions"))
-    if with_phrases:
+    marked = attach_matched_atoms(spark, paths, docs, doc_col, terms, specs)
+    if positional:
         marked = attach_matched_phrases(
             spark, paths, marked, doc_col, multi_token_phrases(node))
     out = marked.where(
-        indexed_predicate(node, text_col, columns, with_phrases=with_phrases)
+        indexed_predicate(node, text_col, columns, with_phrases=positional)
     ).drop(MATCH_COL, PATTERN_COL)
-    return out.drop(PHRASE_COL) if with_phrases else out
+    return out.drop(PHRASE_COL) if positional else out

@@ -239,7 +239,7 @@ def merge_segments(spark: SparkSession, paths: IndexPaths, fanin: int = 4) -> No
     # route each output segment to its own reduce task (same placement
     # guarantee as the build/query exchanges — see routed_segment_groupby)
     merged = routed_segment_groupby(
-        grouped, new_ids, col="new_seg", pack=False).applyInPandas(
+        grouped, new_ids, col="new_seg").applyInPandas(
         run, schema=SEGMENT_SCHEMA)
     merged.write.mode("append").partitionBy("seg_id").parquet(paths.segments)
 

@@ -12,15 +12,19 @@ Two executors, rank-identical to each other and to the pure-Python oracle:
    picks partial aggregation and the limit-pushdown automatically.
 
 2. ``bm25_topk_wand`` — block-max WAND (Broder et al.; Ding & Suel block-max)
-   over compressed SPIMI segments: segments are doc-disjoint, so each task
-   runs an independent DAAT WAND over its segment's postings with a local
-   top-k heap; global answer = union of per-segment candidates → top-k. The
+   over compressed SPIMI segments: segments are doc-disjoint, so each
+   segment runs an independent WAND over its postings with a local top-k
+   heap; global answer = union of per-segment candidates → top-k. The
    block-max metadata lets a segment skip whole 128-posting blocks whose
    upper-bound score can't beat the local heap threshold.
 
-Scale: query-term pushdown prunes the parquet scan to |q| rows per segment;
-per-segment WAND never materializes a full posting list on the driver;
-the final top-k is a tree reduction (orderBy+limit ⇒ TakeOrdered).
+Every index read here goes through ``build.segment_map``: ONE narrow Spark
+stage whose tasks read each live segment's query-term rows (plus its doclen
+and field norm sidecars) straight from the segment directory with pyarrow
+and run the per-segment kernel — the query phase of an ES shard. No
+parquet schema job, no JVM scan stage, no routing exchange; the final top-k
+is a per-task TakeOrdered plus a driver merge (phrase top-k merges on the
+driver itself, since its idf needs every segment's match count).
 """
 
 from __future__ import annotations
@@ -28,7 +32,6 @@ from __future__ import annotations
 import heapq
 import math
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -37,8 +40,8 @@ from pyspark.sql import functions as F
 
 from ..tokenizer import tokenize_py, tokens_col
 from .build import (
-    B, K1, IndexPaths, block_upper_bound, live_seg_ids, load_stats,
-    read_live_segments, routed_segment_groupby,
+    B, K1, IndexPaths, SegmentRows, block_upper_bound, load_stats,
+    segment_map,
 )
 from .codec import decode_position_stream, varbyte_decode
 
@@ -476,55 +479,43 @@ def _phrase_seg_match(plists: dict, distinct: list[str],
     return inter[uniq], tfs.astype(np.int64)
 
 
-def _phrase_hits(spark: SparkSession, paths: IndexPaths,
-                 phrase: str | list[str], slop: int = 0) -> DataFrame | None:
-    """(doc_id, tf, dl) for every doc containing the phrase (optionally with
-    ``slop``, Lucene sloppy-phrase semantics — see ``_sloppy_tf``), off the
-    index. None when the phrase trivially matches nothing (empty after
-    tokenize, or contains a zero-df term). Single-token 'phrases' degrade to
-    a plain posting-list read (no positions needed). A list argument is
-    taken as ALREADY-analyzed dictionary terms (the per-field path passes
-    `field:token`-qualified terms)."""
-    toks = list(phrase) if isinstance(phrase, list) else tokenize_py(phrase)
+def _sidecar(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(doc ids, lengths) of a segment's doclen or ``field:`` norm sidecar
+    row (the first of ``rows``)."""
+    return (np.cumsum(varbyte_decode(bytes(rows["doc_blob"].iloc[0])))
+            .astype(np.int64),
+            varbyte_decode(bytes(rows["tf_blob"].iloc[0])).astype(np.int64))
+
+
+def _phrase_plan(paths: IndexPaths, toks: list[str], slop: int = 0):
+    """(SegmentRows, seg_fn) for a phrase of analyzed dictionary terms:
+    ``seg_fn(pdf)`` returns the (doc_id, tf, dl) arrays of the docs holding
+    the phrase within one segment (``slop`` > 0 = Lucene sloppy phrase, see
+    ``_sloppy_tf``). None when the phrase trivially matches nothing (no
+    tokens, or a zero-df term). A single token is a plain posting-list read
+    (no positions needed). Per-field phrases (tokens sharing one `field:`
+    prefix) are normalized by the FIELD's doc length sidecar."""
     m = len(toks)
     if m == 0:
         return None
-    stats = load_stats(paths)
-    if m == 1:
-        return posting_tfs_df(spark, paths, toks).select("doc_id", "tf", "dl")
-    if not stats.get("positions"):
+    if m > 1 and not load_stats(paths).get("positions"):
         raise ValueError(
             "phrase queries need a positional index "
             "(build_segments(..., positions=True))")
     distinct = list(dict.fromkeys(toks))
-
-    present = len(_termstats_lookup(paths, distinct))
-    if present < len(distinct):
-        # a phrase containing a zero-df term matches nothing anywhere
+    if len(_termstats_lookup(paths, distinct)) < len(distinct):
         return None
-
-    # per-field phrases (qualified tokens share one `field:` prefix) are
-    # normalized by the FIELD's doc length — fetch that norm sidecar too
     fld = _term_field(toks[0])
     side_term = (fld + ":") if fld is not None else None
-    side_pred = F.col("term").isNull()
-    if side_term is not None:
-        side_pred = side_pred | (F.col("term") == side_term)
-    seg_cols = ["seg_id", "term", "doc_blob", "tf_blob", "pos_blob"]
-    live = read_live_segments(spark, paths)
-    has_bpe = "block_pos_ends" in live.columns
-    if has_bpe:
-        seg_cols.append("block_pos_ends")
-    segs = live.where(
-        F.col("term").isin(distinct) | side_pred
-    ).select(*seg_cols)
-
+    cols = ("doc_blob", "tf_blob")
+    if m > 1:
+        cols += ("pos_blob", "block_pos_ends")
+    rows = SegmentRows(columns=cols, doclen=True, terms=tuple(
+        distinct + ([side_term] if side_term is not None else [])))
     phrase_terms = list(toks)  # ordered, with duplicates
+    nothing = np.empty(0, np.int64)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "tf": pd.Series(dtype="int64"),
-                              "dl": pd.Series(dtype="int64")})
+    def seg_fn(pdf: pd.DataFrame):
         dl_rows = pdf[pdf["term"].isna()]
         if side_term is not None:
             frows = pdf[pdf["term"] == side_term]
@@ -533,34 +524,50 @@ def _phrase_hits(spark: SparkSession, paths: IndexPaths,
             pdf = pdf[pdf["term"] != side_term]
         term_rows = pdf[pdf["term"].notna()]
         if dl_rows.empty or len(term_rows) < len(distinct):
-            return empty  # conjunction: every distinct term must occur here
-        dl_docs = np.cumsum(
-            varbyte_decode(bytes(dl_rows["doc_blob"].iloc[0]))).astype(np.int64)
-        dl_vals = varbyte_decode(bytes(dl_rows["tf_blob"].iloc[0])).astype(np.int64)
+            return nothing, nothing, nothing  # every term must occur here
+        dl_docs, dl_vals = _sidecar(dl_rows)
+        if m == 1:
+            d = np.cumsum(varbyte_decode(
+                bytes(term_rows["doc_blob"].iloc[0]))).astype(np.int64)
+            tfs_arr = varbyte_decode(
+                bytes(term_rows["tf_blob"].iloc[0])).astype(np.int64)
+            return d, tfs_arr, dl_vals[np.searchsorted(dl_docs, d)]
         raw: dict[str, tuple] = {}
-        bpes = (term_rows["block_pos_ends"] if has_bpe
-                else [None] * len(term_rows))
         for term, dblob, tblob, pblob, bpe in zip(
                 term_rows["term"], term_rows["doc_blob"],
-                term_rows["tf_blob"], term_rows["pos_blob"], bpes):
+                term_rows["tf_blob"], term_rows["pos_blob"],
+                term_rows["block_pos_ends"]):
             docs = np.cumsum(varbyte_decode(bytes(dblob))).astype(np.int64)
             tfs = varbyte_decode(bytes(tblob)).astype(np.int64)
             raw[term] = (docs, tfs, bytes(pblob),
                          None if bpe is None else np.asarray(bpe, np.int64))
-        inter, plists = _lazy_plists(raw, distinct)
+        _, plists = _lazy_plists(raw, distinct)
         if plists is None:
-            return empty
+            return nothing, nothing, nothing
         d, tfs_arr = _phrase_seg_match(plists, distinct, phrase_terms, slop)
-        if d.size == 0:
-            return empty
-        return pd.DataFrame({
-            "doc_id": d,
-            "tf": tfs_arr,
-            "dl": dl_vals[np.searchsorted(dl_docs, d)],
-        })
+        return d, tfs_arr, dl_vals[np.searchsorted(dl_docs, d)]
 
-    return routed_segment_groupby(segs, live_seg_ids(stats)).applyInPandas(
-        run, schema="doc_id long, tf long, dl long")
+    return rows, seg_fn
+
+
+def _phrase_hits(spark: SparkSession, paths: IndexPaths,
+                 phrase: str | list[str], slop: int = 0) -> DataFrame | None:
+    """(doc_id, tf, dl) for every doc containing the phrase, off the index
+    (see ``_phrase_plan``; None when it trivially matches nothing). A list
+    argument is taken as ALREADY-analyzed dictionary terms (the per-field
+    path passes `field:token`-qualified terms)."""
+    toks = list(phrase) if isinstance(phrase, list) else tokenize_py(phrase)
+    plan = _phrase_plan(paths, toks, slop)
+    if plan is None:
+        return None
+    rows, seg_fn = plan
+
+    def run(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
+        d, tf, dl = seg_fn(pdf)
+        return pd.DataFrame({"doc_id": d, "tf": tf, "dl": dl})
+
+    return segment_map(spark, paths, rows, run,
+                       "doc_id long, tf long, dl long")
 
 
 def phrase_topk_wand(
@@ -573,82 +580,77 @@ def phrase_topk_wand(
     intersecting the per-term position lists stored in the segments (Lucene
     PhraseQuery over .prx), BM25-scored with the phrase's own df/idf.
 
-    This is the scale fix for the one query shape that used to re-tokenize
-    the whole corpus per query (``phrase_topk_df``): the plan here reads ONLY
-    segments.parquet rows for the phrase's distinct terms (term IN (...)
-    pushed to the scan) plus the doclen sidecars — at 10^12 docs a phrase
-    query touches |q| posting lists per segment, never the documents table.
-    Requires an index built with ``positions=True`` (single-token phrases
-    work on any index)."""
-    hits = _phrase_hits(spark, paths, phrase)
-    if hits is None:
+    The plan reads ONLY the phrase's distinct terms plus the doclen
+    sidecar of each segment — at 10^12 docs a phrase query touches |q|
+    posting lists per segment, never the documents table — and runs as ONE
+    job: the idf is not known until every segment has counted its matches,
+    so each segment ships its local top-k by the idf-free BM25 factor
+    (widened to every doc within rounding of the k-th value, so ties and
+    near-ties survive) plus one count row (dl = -1). The driver sums the
+    counts into df, scores the candidates with the same float expression
+    as the DataFrame scorers and merges (score desc, doc_id asc) — the
+    coordinating-node merge of a sharded search. Requires an index built
+    with ``positions=True`` (single-token phrases work on any index)."""
+    plan = _phrase_plan(paths, tokenize_py(phrase))
+    if plan is None:
         return spark.createDataFrame([], TOPK_SCHEMA)
+    rows, seg_fn = plan
     stats = load_stats(paths)
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    # one materialization (eager localCheckpoint — lineage truncated, blocks
-    # GC'd with the query's DataFrames), one tiny count over it, literal idf:
-    # a broadcast-join of the count would recompute the positional
-    # intersection (measured 4x slower at 600k), a bare cache would pin
-    # partitions until eviction
-    hits = hits.localCheckpoint(eager=True)
-    dfp = hits.count()
+    n_docs, avgdl = stats["n_docs"], float(stats["avgdl"])
+
+    def run(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
+        d, tf, dl = seg_fn(pdf)
+        n = d.size
+        if 0 < k < n:
+            f = _impact_np(tf, dl, avgdl)
+            kth = np.partition(f, n - k)[n - k]
+            keep = f >= kth - abs(kth) * 1e-9
+            d, tf, dl = d[keep], tf[keep], dl[keep]
+        return pd.DataFrame({"doc_id": np.append(d, 0),
+                             "tf": np.append(tf, n), "dl": np.append(dl, -1)})
+
+    got = segment_map(spark, paths, rows, run,
+                      "doc_id long, tf long, dl long").collect()
+    dfp = sum(int(r["tf"]) for r in got if r["dl"] < 0)
     if dfp == 0:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    idf = _idf(n_docs, int(dfp))
-    scored = hits.select(
-        "doc_id",
-        (
-            F.lit(idf) * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(float(avgdl))))
-        ).alias("score"),
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    idf = _idf(n_docs, dfp)
+    scored = sorted(
+        ((int(r["doc_id"]),
+          idf * (r["tf"] * (K1 + 1.0))
+          / (r["tf"] + K1 * (1.0 - B + B * r["dl"] / avgdl)))
+         for r in got if r["dl"] >= 0),
+        key=lambda x: (-x[1], x[0]))
+    return spark.createDataFrame(scored[:k], TOPK_SCHEMA)
 
 
 def posting_tfs_df(spark: SparkSession, paths: IndexPaths,
                    terms: list[str] | None = None,
-                   term_pred: Column | None = None) -> DataFrame:
+                   patterns: list[tuple] = ()) -> DataFrame:
     """(term, doc_id, tf, dl) decoded from the compressed segments for the
-    requested terms only — the term IN (...) filter (or an arbitrary
-    ``term_pred`` Column over the dictionary's term strings, e.g. a wildcard
-    rlike or a levenshtein bound — Lucene MultiTermQuery expansion as a
-    distributed dictionary scan, never a driver-side term list) reaches the
-    parquet scan, so only matching dictionary rows per segment are read
-    regardless of corpus size. The doc length rides along from the segment's
-    co-located sidecar row (searchsorted gather inside the same task), so
-    scoring needs NO shuffle join against a corpus-wide doclen table."""
-    if term_pred is None:
-        term_pred = F.col("term").isin(terms or [])
-    # "field:" norm sidecars ride along (one tiny row per field per segment)
-    # so `field:token` entries get the FIELD's doc length, not the text's
-    segs = read_live_segments(spark, paths).where(
-        term_pred | F.col("term").isNull()
-        | (F.col("term").isNotNull() & F.col("term").endswith(":"))
-    ).select("seg_id", "term", "doc_blob", "tf_blob")
+    requested terms plus every dictionary term a pattern-atom spec accepts
+    (``term_matcher`` — Lucene MultiTermQuery expansion per segment, never
+    a driver-side term list); only matching dictionary rows are decoded,
+    regardless of corpus size. The doc length rides along from the
+    segment's co-located sidecar row (searchsorted gather inside the same
+    task), so scoring needs NO shuffle join against a corpus-wide doclen
+    table; `field:token` entries take their FIELD's norm sidecar."""
+    terms = list(terms or ())
+    sides = {f + ":" for f in map(_term_field, terms) if f is not None}
+    rows = SegmentRows(columns=("doc_blob", "tf_blob"),
+                       terms=tuple(terms + sorted(sides)),
+                       patterns=tuple(patterns), doclen=True)
 
-    def decode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({
-            "term": pd.Series(dtype="object"),
-            "doc_id": pd.Series(dtype="int64"),
-            "tf": pd.Series(dtype="int64"),
-            "dl": pd.Series(dtype="int64"),
-        })
+    def decode(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
         dl_rows = pdf[pdf["term"].isna()]
         notna = pdf[pdf["term"].notna()]
         fmask = notna["term"].str.endswith(":")
-        sidecars = {}
-        for fterm, grp in notna[fmask].groupby("term"):
-            sidecars[fterm] = (
-                np.cumsum(varbyte_decode(
-                    bytes(grp["doc_blob"].iloc[0]))).astype(np.int64),
-                varbyte_decode(bytes(grp["tf_blob"].iloc[0])).astype(np.int64))
         term_rows = notna[~fmask]
         if dl_rows.empty or term_rows.empty:
-            return empty
-        sidecars[None] = (
-            np.cumsum(varbyte_decode(
-                bytes(dl_rows["doc_blob"].iloc[0]))).astype(np.int64),
-            varbyte_decode(bytes(dl_rows["tf_blob"].iloc[0])).astype(np.int64))
+            return term_rows.iloc[0:0]
+        sidecars = {fterm: _sidecar(grp)
+                    for fterm, grp in notna[fmask].groupby("term")}
+        sidecars[None] = _sidecar(dl_rows)
         ts, ds, fs, dls = [], [], [], []
         for term, dblob, tblob in zip(term_rows["term"], term_rows["doc_blob"],
                                       term_rows["tf_blob"]):
@@ -667,9 +669,8 @@ def posting_tfs_df(spark: SparkSession, paths: IndexPaths,
             "dl": np.concatenate(dls),
         })
 
-    return routed_segment_groupby(
-        segs, live_seg_ids(load_stats(paths))).applyInPandas(
-        decode, schema="term string, doc_id long, tf long, dl long")
+    return segment_map(spark, paths, rows, decode,
+                       "term string, doc_id long, tf long, dl long")
 
 
 def phrase_matches_df(spark: SparkSession, paths: IndexPaths,
@@ -768,6 +769,7 @@ def _text_scores(spark: SparkSession, paths: IndexPaths,
     text atoms (terms / wildcards / fuzzies / phrases), entirely off the
     index. None when the query has no scorable atoms."""
     from ..queryparser import collect_query_atoms
+    from .filter import regexp_spec, wildcard_spec
 
     atoms = collect_query_atoms(node)
     stats = load_stats(paths)
@@ -804,6 +806,9 @@ def _text_scores(spark: SparkSession, paths: IndexPaths,
     # by both a literal and a pattern contributes both clauses), and N
     # atoms cost one scan + one shuffle instead of N of each.
     legs: list[tuple[Column, Column]] = []  # (term predicate, weight)
+    # the same expansion for the segment read: Python matcher specs
+    specs: list[tuple] = []
+    terms: list[str] = []
     if atoms["terms"]:
         boosts = dict(atoms["terms"])
         terms = list(boosts)
@@ -814,10 +819,13 @@ def _text_scores(spark: SparkSession, paths: IndexPaths,
         pred = wildcard_term_pred(w)
         if pred is not None:
             legs.append((pred, F.lit(float(b))))
+            specs.append(wildcard_spec(w))
     for p, b in atoms.get("regexps", []):
         legs.append((regexp_term_pred(p), F.lit(float(b))))
+        specs.append(regexp_spec(p))
     for t, n, b in atoms["fuzzies"]:
         legs.append((fuzzy_term_pred(t, n), F.lit(float(b))))
+        specs.append(("lev", t, n))
     if legs:
         combined = legs[0][0]
         for pred, _ in legs[1:]:
@@ -832,7 +840,7 @@ def _text_scores(spark: SparkSession, paths: IndexPaths,
                     weight.alias("__w"), n_col.alias("__n"),
                     a_col.alias("__avgdl"))
         )
-        post = posting_tfs_df(spark, paths, term_pred=combined)
+        post = posting_tfs_df(spark, paths, terms, specs)
         idf_col = F.log(
             1.0 + (F.col("__n") - F.col("__df") + 0.5)
             / (F.col("__df") + 0.5)) * F.col("__w")
@@ -957,18 +965,16 @@ def _resolve_analyzed_for(paths: IndexPaths, node):
 def doclen_df(spark: SparkSession, paths: IndexPaths) -> DataFrame:
     """(doc_id, dl) decoded from the per-segment doclen sidecar rows — the
     corpus text is never re-tokenized once an index exists."""
-    segs = read_live_segments(spark, paths).where(
-        F.col("term").isNull()
-    ).select("doc_blob", "tf_blob")
+    def decode(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
+        if pdf.empty:  # a live segment with no directory holds no docs
+            return pdf
+        docs, dls = _sidecar(pdf)
+        return pd.DataFrame({"doc_id": docs, "dl": dls})
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for dblob, tblob in zip(pdf["doc_blob"], pdf["tf_blob"]):
-                docs = np.cumsum(varbyte_decode(bytes(dblob))).astype(np.int64)
-                dls = varbyte_decode(bytes(tblob)).astype(np.int64)
-                yield pd.DataFrame({"doc_id": docs, "dl": dls})
-
-    return segs.mapInPandas(decode, schema="doc_id long, dl long")
+    return segment_map(
+        spark, paths, SegmentRows(columns=("doc_blob", "tf_blob"),
+                                  doclen=True),
+        decode, "doc_id long, dl long")
 
 
 class _TermCursor:
@@ -1360,17 +1366,15 @@ def bm25_topk_wand(
         fld + ":" for fld in (_term_field(t) for t in terms)
         if fld is not None and fld in fnorms})
 
-    # single scan: query-term rows + the doclen sidecar row, co-located per
-    # segment — the filter pushes to parquet (term IN (...) OR term IS NULL)
-    # column pruning matters: pos_blob (when the index is positional) is the
-    # largest column in the segment table and WAND never touches it — the
-    # select keeps it out of the parquet scan entirely
-    segs = read_live_segments(spark, paths).where(
-        F.col("term").isin(terms + side_terms) | F.col("term").isNull()
-    ).select("seg_id", "term", "doc_blob", "tf_blob",
-             "block_last_doc", "block_max_tf", "block_min_dl")
+    # per segment: query-term rows + the doclen (and field norm) sidecar
+    # rows, co-located. Column pruning matters: pos_blob (when the index is
+    # positional) is the largest column and WAND never touches it.
+    rows = SegmentRows(
+        columns=("doc_blob", "tf_blob", "block_last_doc", "block_max_tf",
+                 "block_min_dl"),
+        terms=tuple(terms + side_terms), doclen=True)
 
-    def run(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(seg: int, pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                               "score": pd.Series(dtype="float64")})
         dl_rows = pdf[pdf["term"].isna()]
@@ -1379,18 +1383,12 @@ def bm25_topk_wand(
         for ft in side_terms:
             grp = notna[notna["term"] == ft]
             if not grp.empty:
-                side[ft] = (
-                    np.cumsum(varbyte_decode(
-                        bytes(grp["doc_blob"].iloc[0]))).astype(np.int64),
-                    varbyte_decode(
-                        bytes(grp["tf_blob"].iloc[0])).astype(np.int64))
+                side[ft] = _sidecar(grp)
         term_rows = (notna[~notna["term"].isin(side_terms)]
                      if side_terms else notna)
         if dl_rows.empty or term_rows.empty:
             return empty
-        dl_docs = np.cumsum(
-            varbyte_decode(bytes(dl_rows["doc_blob"].iloc[0]))).astype(np.int64)
-        dl_vals = varbyte_decode(bytes(dl_rows["tf_blob"].iloc[0])).astype(np.int64)
+        dl_docs, dl_vals = _sidecar(dl_rows)
         cursors = []
         for _, row in term_rows.iterrows():
             idf = idfs[row["term"]]
@@ -1424,6 +1422,5 @@ def bm25_topk_wand(
             res = _or_segment(cursors, k, avgdl)
         return pd.DataFrame(res, columns=["doc_id", "score"])
 
-    local = routed_segment_groupby(segs, live_seg_ids(stats)).applyInPandas(
-        run, schema=TOPK_SCHEMA)
+    local = segment_map(spark, paths, rows, run, TOPK_SCHEMA)
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

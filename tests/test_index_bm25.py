@@ -135,6 +135,32 @@ def test_phrase_wand_survives_append_and_tier_merge(
     _check(got2, oracle.topk(["customer", "window"], K, "or"))
 
 
+def test_phrase_topk_ties_across_segments(spark, tmp_path_factory):
+    """phrase_topk_wand merges per-segment candidates on the driver: when
+    the k-th score is shared by docs in every segment, each segment must
+    ship all of its docs tied at its local k-th value, so that the merge
+    keeps the oracle's order (score desc, doc_id asc) for every k."""
+    from ee_outliers_spark.index.query import phrase_topk_wand
+
+    rows = []
+    for d in range(60):
+        if d % 7 == 3:
+            text = "alpha beta alpha beta x"      # tf 2: tied at the top
+        elif d % 3 == 0:
+            text = "beta alpha x y"               # no phrase
+        else:
+            text = "alpha beta x y"               # tf 1: one big tie
+        rows.append((d, text))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    p = build_segments(spark, docs, "doc_id", "text",
+                       str(tmp_path_factory.mktemp("index_phrase_ties")),
+                       num_segments=4, positions=True)
+    oracle = OracleIndex({d: t for d, t in rows})
+    for k in (1, 5, 9, 12, 40, 60):
+        got = phrase_topk_wand(spark, p, "alpha beta", k).collect()
+        _check(got, oracle.phrase_topk(["alpha", "beta"], k))
+
+
 def test_wand_multiblock_tied_pivot(spark, tmp_path_factory):
     """Regression: with >128 postings per list (multiple blocks, so block_ub
     < max_score) and cursors TIED on the pivot doc, the block-max upper bound
@@ -187,7 +213,8 @@ def test_indexed_filter_matches_predicate_and_avoids_regex(
     assert got2 == want2
 
 
-def test_matching_ids_postings_only(spark, documents, pos_paths):
+def test_matching_ids_postings_only(spark, documents, pos_paths,
+                                   monkeypatch):
     """Text-only booleans resolve ENTIRELY off the index (matching_ids —
     the ES _count / filter-context fast path): same doc set as the regex
     compilation over the corpus across atom shapes, including the
@@ -224,22 +251,25 @@ def test_matching_ids_postings_only(spark, documents, pos_paths):
     for qs in ["window AND lang:en", "n_chars:[10 TO 200]",
                "_exists_:source"]:
         assert not text_only(parse_query_string(qs), positional=True), qs
-    # the doclen-sidecar universe ships only when NOT/match-all needs it —
-    # a positive-only boolean's scan filter has no isnull(term) leg
-    pos_plan = matching_ids(
-        spark, pos_paths, parse_query_string("window AND cust*")
-    )._jdf.queryExecution().optimizedPlan().toString().lower()
-    assert "isnull(term" not in pos_plan
-    neg_plan = matching_ids(
-        spark, pos_paths, parse_query_string("NOT window")
-    )._jdf.queryExecution().optimizedPlan().toString().lower()
-    assert "isnull(term" in neg_plan
-    # `X AND NOT Y` evaluates the NOT as subtraction from the positive
-    # conjunction (Lucene ReqExcl) — no universe row in the scan either
-    req_excl_plan = matching_ids(
-        spark, pos_paths, parse_query_string('window AND NOT "batch batch"')
-    )._jdf.queryExecution().optimizedPlan().toString().lower()
-    assert "isnull(term" not in req_excl_plan
+    # the doclen-sidecar universe is read only when NOT/match-all needs it:
+    # the rows that segment_map receives for a positive-only boolean have
+    # no doclen leg, and `X AND NOT Y` evaluates the NOT as subtraction
+    # from the positive conjunction (Lucene ReqExcl) — no universe either
+    import ee_outliers_spark.index.filter as filt
+
+    seen = []
+    real = filt.segment_map
+
+    def spy(spark_, paths_, rows, kernel, schema):
+        seen.append(rows)
+        return real(spark_, paths_, rows, kernel, schema)
+
+    monkeypatch.setattr(filt, "segment_map", spy)
+    for qs, universe in [("window AND cust*", False), ("NOT window", True),
+                         ('window AND NOT "batch batch"', False)]:
+        seen.clear()
+        matching_ids(spark, pos_paths, parse_query_string(qs))
+        assert [r.doclen for r in seen] == [universe], qs
 
 
 def test_matching_ids_agrees_on_full_query_corpus(spark, documents,
@@ -616,12 +646,10 @@ def test_segment_routing_is_one_task_per_segment(spark, documents):
 
 def test_routed_segment_groupby_random_live_sets(spark):
     """Property test over random sparse live-sets (round-6 verdict #6):
-    routed_segment_groupby must invoke the kernel exactly once per live
-    segment with a SINGLE-segment pdf for every live-set shape the LSM can
-    produce (sparse, non-contiguous seg_ids after compaction), on both the
-    one-task-per-segment path (n ≤ cores) and the packed path (n > cores —
-    round-7: segments round-robin packed into defaultParallelism balanced
-    reduce tasks, kernel re-invoked per segment inside the task)."""
+    routed_segment_groupby (the LSM merge exchange) must invoke the kernel
+    exactly once per live segment with a SINGLE-segment pdf for every
+    live-set shape the LSM can produce (sparse, non-contiguous seg_ids
+    after compaction), with fewer and with more segments than cores."""
     import random
 
     import pandas as pd
@@ -655,6 +683,117 @@ def test_routed_segment_groupby_random_live_sets(spark):
             seg_of, "seg_id int, uniq int, rows int").collect()
         assert sorted(r["seg_id"] for r in got2) == sorted(live + [1025])
         assert all(r["uniq"] == 1 for r in got2)
+
+
+def test_segment_map_random_live_sets(spark, documents, tmp_path_factory):
+    """segment_map runs the kernel exactly once per live segment — for
+    fewer, as many and more live segments than cores, on random sparse
+    live sets — over min(n_live, cores) tasks, hands it only the requested
+    rows (terms, pattern matches, the doclen sidecar; a column a file
+    lacks reads as None), and never reads a directory outside the
+    commit point's live list: dead directories here hold garbage that
+    would fail any read."""
+    import json
+    import os
+    import random
+    import shutil
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ee_outliers_spark.index.build import (
+        IndexPaths, SegmentRows, segment_map,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    rng = random.Random(11)
+    table = pa.table({
+        "term": pa.array([None, "a", "b1", "bz", "x:b1", "x:"], pa.string()),
+        "doc_blob": pa.array([b"\x01"] * 6, pa.binary()),
+    })
+
+    def kernel(seg, pdf):
+        return pd.DataFrame({
+            "seg_id": [seg],
+            "terms": [",".join(sorted(
+                "NULL" if t is None else t for t in pdf["term"]))],
+            "bpe_none": [bool(pdf["block_pos_ends"].isna().all())],
+        })
+
+    root = str(tmp_path_factory.mktemp("segmap"))
+    for size in sorted({1, max(1, cores - 1), cores, cores + 1,
+                        2 * cores + 3, 64, 131}):
+        ids = rng.sample(range(1024), size + 3)
+        live, dead = sorted(ids[:size]), ids[size:]
+        paths = IndexPaths(os.path.join(root, f"n{size}"))
+        for s_ in live:
+            os.makedirs(os.path.join(paths.segments, f"seg_id={s_}"))
+            pq.write_table(table, os.path.join(
+                paths.segments, f"seg_id={s_}", "part-0.parquet"))
+        for s_ in dead:
+            os.makedirs(os.path.join(paths.segments, f"seg_id={s_}"))
+            with open(os.path.join(paths.segments, f"seg_id={s_}",
+                                   "part-0.parquet"), "wb") as fh:
+                fh.write(b"not parquet")
+        with open(paths.stats, "w") as fh:
+            json.dump({"live_segments": live}, fh)
+        rows = SegmentRows(columns=("doc_blob", "block_pos_ends"),
+                           terms=("a",), patterns=(("re", "b[0-9]"),))
+        out = segment_map(spark, paths, rows, kernel,
+                          "seg_id int, terms string, bpe_none boolean")
+        assert out.rdd.getNumPartitions() == min(size, cores), size
+        got = out.collect()
+        assert sorted(r["seg_id"] for r in got) == live, size
+        # pattern atoms never expand into the `field:` namespace
+        assert {r["terms"] for r in got} == {"a,b1"}, size
+        assert all(r["bpe_none"] for r in got), size
+    every = segment_map(
+        spark, paths, SegmentRows(columns=("block_pos_ends",),
+                                  terms=("bz", "x:"), doclen=True),
+        kernel, "seg_id int, terms string, bpe_none boolean").collect()
+    assert {r["terms"] for r in every} == {"NULL,bz,x:"}
+    # a live segment without a directory (it received no docs) still gets
+    # its one kernel call, with no rows
+    with open(paths.stats, "w") as fh:
+        json.dump({"live_segments": live + [2000]}, fh)
+    empty = [r for r in segment_map(
+        spark, paths, SegmentRows(columns=("block_pos_ends",), doclen=True),
+        kernel, "seg_id int, terms string, bpe_none boolean").collect()
+        if r["seg_id"] == 2000]
+    assert [r["terms"] for r in empty] == [""]
+
+    # a real LSM history: build, append, tier-merge; the merged inputs'
+    # directories come back as garbage (a crash before GC) and must never
+    # be read
+    from ee_outliers_spark.index.build import build_segments, load_stats
+    from ee_outliers_spark.index.merge import merge_tier
+    from ee_outliers_spark.streaming.daemon import append_segments
+    from pyspark.sql import functions as SF
+
+    out = str(tmp_path_factory.mktemp("segmap_lsm"))
+    p = build_segments(spark, documents.where(SF.col("doc_id") % 2 == 0),
+                       "doc_id", "text", out, num_segments=4)
+    append_segments(spark, documents.where(SF.col("doc_id") % 2 == 1),
+                    p, num_segments=2)
+    before = set(load_stats(p)["live_segments"])
+    merge_tier(spark, p, fanin=3)
+    live = sorted(load_stats(p)["live_segments"])
+    dead = sorted(before - set(live))
+    assert dead
+    for s_ in dead:
+        d = os.path.join(p.segments, f"seg_id={s_}")
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        with open(os.path.join(d, "part-0.parquet"), "wb") as fh:
+            fh.write(b"not parquet")
+    docs_seen = segment_map(
+        spark, p, SegmentRows(columns=("doc_blob", "n_docs"), doclen=True),
+        lambda seg, pdf: pd.DataFrame({"seg_id": [seg],
+                                       "n": [int(pdf["n_docs"].sum())]}),
+        "seg_id int, n long").collect()
+    assert sorted(r["seg_id"] for r in docs_seen) == live
+    assert sum(r["n"] for r in docs_seen) == documents.count()
 
 
 def test_phrase_seg_match_repeated_sloppy_randomized():
@@ -713,8 +852,8 @@ def test_auto_num_segments_budget(spark):
     """Derived segment count follows the SPIMI memory budget: ~16k docs
     per segment (ceil of the need) past one wave — the round-7 two-armed
     wave-align probe measured need-based counts ~10% faster to build than
-    wave-down-rounded ones, and query kernels now pack into `cores` tasks
-    regardless of segment count — capped (beyond the cap a corpus shards
+    wave-down-rounded ones, and a query stage runs min(segments, cores)
+    tasks regardless of segment count (segment_map) — capped (beyond the cap a corpus shards
     into multiple indexes). BELOW one wave the count is need-scaled
     (~4k docs per segment, capped at cores), not floored at the core
     count: interleaved fresh-JVM A/Bs (bench_evidence/segfloor_r7/)
@@ -730,7 +869,10 @@ def test_auto_num_segments_budget(spark):
     # Tiny corpora: one segment per ~4k docs, never more than cores.
     assert auto_num_segments(spark, 100) == 1
     assert auto_num_segments(spark, 5_000) == min(cores, 2)
-    assert auto_num_segments(spark, 50_000) == min(cores, 13)
+    # 50k docs need 4 budget segments: below 4 cores that need (more than
+    # one wave) wins over the small-corpus floor
+    expect = 4 if cores < 4 else min(cores, 13)
+    assert auto_num_segments(spark, 50_000) == expect
     # The small-corpus floor never drops below the SPIMI need and joins
     # the need path continuously at one wave (need == cores).
     n_midsize = 131_072  # need 8; small-floor ceil(n/4096) = 32
