@@ -18,6 +18,9 @@ Two executors, rank-identical to each other and to the pure-Python oracle:
    block-max metadata lets a segment skip whole 128-posting blocks whose
    upper-bound score can't beat the local heap threshold.
 
+Phrase queries have one executor, ``phrase_topk_wand``, which reads the
+positions stored in positional segments.
+
 Every index read here goes through ``build.segment_map``: ONE narrow Spark
 stage whose tasks read each live segment's query-term rows (plus its doclen
 and field norm sidecars) straight from the segment directory with pyarrow
@@ -38,7 +41,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tokenizer import tokenize_py, tokens_col
+from ..tokenizer import tokenize_py
 from .build import (
     B, K1, IndexPaths, SegmentRows, block_upper_bound, load_stats,
     segment_map,
@@ -173,68 +176,6 @@ def bm25_topk_df(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-
-
-def phrase_topk_df(
-    df: DataFrame,
-    doc_col: str,
-    text_col: str,
-    doclen: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    phrase: str,
-    k: int,
-) -> DataFrame:
-    """Phrase query: tf = token-position phrase frequency (Lucene PhraseQuery
-    semantics, occurrences may overlap); df = docs containing the phrase;
-    scored BM25. The scan stays JVM-side — array HOFs (split/filter/sequence)
-    inside whole-stage codegen, no Python UDF."""
-    toks = tokenize_py(phrase)
-    m = len(toks)
-    # tokens materialize JVM-side (codegen split/filter); the positional
-    # phrase count is a vectorized Arrow UDF over the token arrays — array
-    # HOF lambdas evaluate interpreted per element in Spark and were ~20x
-    # slower here, and embedding the tokenizer expr in the lambda re-ran the
-    # split per element_at (O(tokens²)/row)
-    phrase_arr = np.asarray(toks, dtype=object)
-
-    @F.pandas_udf("long")
-    def _phrase_tf(tok_arrays: pd.Series) -> pd.Series:
-        def cnt(lst):
-            if lst is None or len(lst) < m:
-                return 0
-            a = np.asarray(lst, dtype=object)
-            mask = a[: len(a) - m + 1] == phrase_arr[0]
-            for j in range(1, m):
-                mask = mask & (a[j : len(a) - m + 1 + j] == phrase_arr[j])
-            return int(mask.sum())
-        return tok_arrays.map(cnt)
-
-    # eager localCheckpoint (not cache): the hits feed both the df count
-    # and the score join; a cache() with no unpersist() accumulates pinned
-    # partitions across long-lived sessions (the leak pattern fixed in the
-    # indexed path at _text_scores) — checkpoint materializes once and the
-    # blocks are GC-managed with the session
-    hits = (
-        df.select(F.col(doc_col).alias("doc_id"),
-                  tokens_col(F.col(text_col)).alias("_toks"))
-        .select("doc_id", _phrase_tf("_toks").alias("tf"))
-        .where(F.col("tf") > 0)
-        .localCheckpoint(eager=True)
-    )
-    dfp = hits.agg(F.count("*")).collect()[0][0]
-    if dfp == 0:
-        return hits.select("doc_id", F.lit(0.0).alias("score")).limit(0)
-    idf = _idf(n_docs, int(dfp))
-    scored = hits.join(doclen, "doc_id").select(
-        "doc_id",
-        (
-            F.lit(idf)
-            * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(float(avgdl))))
-        ).alias("score"),
-    )
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def _sloppy_tf(plists: dict, phrase_terms: list[str], doc: int,

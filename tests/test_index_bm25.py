@@ -9,9 +9,7 @@ import pytest
 from ee_outliers_spark.index.build import (
     build_doc_lengths, build_postings, build_segments, corpus_stats,
 )
-from ee_outliers_spark.index.query import (
-    bm25_topk_df, bm25_topk_wand, phrase_topk_df,
-)
+from ee_outliers_spark.index.query import bm25_topk_df, bm25_topk_wand
 from ee_outliers_spark.oracle import OracleIndex
 
 K = 20
@@ -65,14 +63,6 @@ def test_df_path_rank_identity(terms, mode, naive, oracle):
 def test_wand_path_rank_identity(terms, mode, spark, seg_paths, oracle):
     got = bm25_topk_wand(spark, seg_paths, terms, K, mode).collect()
     _check(got, oracle.topk(terms, K, mode))
-
-
-@pytest.mark.parametrize("phrase", ["key order", "batch batch", "no such phrase here"])
-def test_phrase_rank_identity(phrase, spark, documents, naive, oracle):
-    _, doclen, n, avgdl = naive
-    got = phrase_topk_df(documents, "doc_id", "text", doclen, n, avgdl, phrase, K).collect()
-    from ee_outliers_spark.tokenizer import tokenize_py
-    _check(got, oracle.phrase_topk(tokenize_py(phrase), K))
 
 
 @pytest.fixture(scope="module")
@@ -534,71 +524,136 @@ def test_phrase_seg_match_vectorized_vs_perdoc(docs_dict):
     assert any_hits > 0
 
 
-def test_text_kernel_matches_pair_stream_segments(spark, documents):
-    """Round 5: positional builds route the RAW TEXT to segments and invert
-    in-worker (_text_segment_kernel) instead of shuffling O(tokens)
-    (term, doc, positions) pairs. The two paths must build BYTE-IDENTICAL
-    segments — same dictionary order, doc/tf/pos blobs, block metadata,
-    sidecars — including per-field analyzed terms."""
+def test_segments_decode_to_tokenized_postings(spark, documents, tmp_path):
+    """Every segment that build_segments writes, and every segment of one
+    append_segments batch (seg_offset routing), decodes to the postings
+    tokenize_py gives for that segment's docs: dictionary, doc ids, tfs
+    and positions; the doclen sidecar (term NULL) and the ``title:`` norm
+    sidecar; and block_last_doc / block_max_tf / block_min_dl recomputed
+    over 128-posting blocks, whose block_pos_ends byte slices decode on
+    their own. Positional and non-positional, with and without an
+    analyzed field; 2 build segments put one term across ≥2 blocks."""
+    import collections
+
+    import numpy as np
+    import pyarrow.dataset as pads
     from pyspark.sql import functions as SF
 
-    from ee_outliers_spark.index.build import (
-        SEGMENT_SCHEMA, _pair_stream, _pairs_segment_frame,
-        segment_frames_df,
-    )
-    from ee_outliers_spark.tokenizer import tokens_col
+    from ee_outliers_spark.index.build import BLOCK
+    from ee_outliers_spark.index.codec import (
+        decode_position_stream, decode_postings)
+    from ee_outliers_spark.streaming.daemon import append_segments
+    from ee_outliers_spark.tokenizer import tokenize_py, tokens_col
 
-    base = documents.select(
+    n_seg, n_app = 2, 3
+    docs = documents.select(
         SF.col("doc_id").cast("long").alias("doc_id"), "text",
-    ).withColumn(
-        "title", SF.array_join(SF.slice(tokens_col("text"), 1, 5), " "))
+        SF.array_join(SF.slice(tokens_col("text"), 1, 5), " ").alias("title"))
+    # the build takes doc_id % 5 != 4, the append batch the rest
+    first, batch = SF.col("doc_id") % 5 != 4, SF.col("doc_id") % 5 == 4
+    toks, seg_of = {}, {}  # (doc_id, field) → tokens; field "" = main text
+    for r in docs.collect():
+        d = int(r["doc_id"])
+        toks[(d, "")] = tokenize_py(r["text"])
+        toks[(d, "title")] = tokenize_py(r["title"])
+        seg_of[d] = d % n_seg if d % 5 != 4 else n_seg + d % n_app
 
-    def key_rows(rows):
-        out = {}
-        for r in rows:
-            k = (int(r["seg_id"]), r["term"])
-            out[k] = (
-                bytes(r["doc_blob"] or b""), bytes(r["tf_blob"] or b""),
-                bytes(r["pos_blob"] or b""), r["block_last_doc"],
-                r["block_max_tf"], r["block_min_dl"], r["df_local"],
-                r["n_postings"], r["n_docs"], r["sum_dl"],
-            )
-        return out
+    def check_segment(pdf, seg_docs, fields, positions):
+        want = collections.defaultdict(dict)  # term → {doc: positions}
+        dl = {f: {} for f in ("", *fields)}
+        for f in dl:
+            prefix = f + ":" if f else ""
+            for d in seg_docs:
+                ts = toks[(d, f)]
+                dl[f][d] = len(ts)
+                for p, t in enumerate(ts):
+                    want[prefix + t].setdefault(d, []).append(p)
+        is_side = pdf["term"].isna() | pdf["term"].str.endswith(":", na=False)
+        term_rows = pdf[~is_side]
+        assert sorted(term_rows["term"]) == sorted(want)
+        max_blocks = 0
+        for r in term_rows.itertuples(index=False):
+            w = want[r.term]
+            wd = np.array(sorted(w), np.int64)
+            wtf = np.array([len(w[d]) for d in wd], np.int64)
+            got_d, got_tf = decode_postings(bytes(r.doc_blob),
+                                            bytes(r.tf_blob))
+            assert got_d.tolist() == wd.tolist(), r.term
+            assert got_tf.tolist() == wtf.tolist(), r.term
+            assert r.df_local == r.n_postings == len(wd)
+            norms = dl[r.term.split(":")[0] if ":" in r.term else ""]
+            blocks = [slice(s, s + BLOCK) for s in range(0, len(wd), BLOCK)]
+            max_blocks = max(max_blocks, len(blocks))
+            assert list(r.block_last_doc) == [int(wd[b][-1]) for b in blocks]
+            assert list(r.block_max_tf) == [int(wtf[b].max()) for b in blocks]
+            assert list(r.block_min_dl) == [
+                min(norms[int(d)] for d in wd[b]) for b in blocks]
+            if not positions:
+                assert r.pos_blob is None and r.block_pos_ends is None
+                continue
+            flat, bounds = decode_position_stream(bytes(r.pos_blob), wtf)
+            got_pos = np.split(flat, bounds[:-1])
+            assert [p.tolist() for p in got_pos] == [w[d] for d in wd], r.term
+            ends = list(r.block_pos_ends)
+            assert len(ends) == len(blocks) and ends[-1] == len(r.pos_blob)
+            for b, lo, hi in zip(blocks, [0] + ends[:-1], ends):
+                bflat, bb = decode_position_stream(
+                    bytes(r.pos_blob)[lo:hi], wtf[b])
+                assert [p.tolist() for p in np.split(bflat, bb[:-1])] == [
+                    w[d] for d in wd[b]], r.term
+        # sidecars: (term, docs with a norm, their lengths)
+        n_terms, n_post = len(term_rows), int(term_rows["n_postings"].sum())
+        side = {None: sorted(seg_docs)}
+        for f in fields:
+            side[f + ":"] = sorted(d for d in seg_docs if dl[f][d])
+        extra = pdf[is_side]
+        assert sorted(extra["term"].fillna("")) == sorted(
+            t or "" for t, ds in side.items() if t is None or ds)
+        for r in extra.itertuples(index=False):
+            key = r.term if isinstance(r.term, str) else None
+            sd = side[key]
+            lens = [dl[key[:-1] if key else ""][d] for d in sd]
+            got_d, got_l = decode_postings(bytes(r.doc_blob), bytes(r.tf_blob))
+            assert got_d.tolist() == sd and got_l.tolist() == lens, key
+            assert (r.n_docs, r.sum_dl) == (len(sd), sum(lens)), key
+            if key is None:
+                assert (r.df_local, r.n_postings) == (n_terms, n_post)
+        return max_blocks
 
-    from ee_outliers_spark.index.build import _textroute_pair_groupby
-
-    for positional in (True, False):
+    for positions in (False, True):
         for fields in ((), ("title",)):
-            got = key_rows(segment_frames_df(
-                base, 4, positional, analyzed_fields=fields,
-                via_text=True).collect())
-            pairs = _pair_stream(base, 4, positions=positional,
-                                 analyzed_fields=fields)
-            want = key_rows(pairs.groupBy("seg_id").applyInPandas(
-                _pairs_segment_frame, schema=SEGMENT_SCHEMA).collect())
-            assert set(got) == set(want), (positional, fields)
-            for k in want:
-                assert got[k] == want[k], (positional, fields, k)
-            if not positional:
-                # third stream shape: single-exchange routed text with
-                # post-shuffle JVM aggregation (the non-positional default)
-                tr = key_rows(_textroute_pair_groupby(
-                    base, 4, fields).applyInPandas(
-                    _pairs_segment_frame, schema=SEGMENT_SCHEMA).collect())
-                assert tr == want, ("textroute", fields)
+            out = str(tmp_path / f"p{int(positions)}_{len(fields)}")
+            paths = build_segments(
+                spark, docs.where(first), "doc_id", "text", out,
+                num_segments=n_seg, positions=positions,
+                analyzed_fields=list(fields))
+            new_ids = append_segments(spark, docs.where(batch), paths,
+                                      num_segments=n_app)
+            assert new_ids == list(range(n_seg, n_seg + n_app))
+            segs = pads.dataset(paths.segments, format="parquet",
+                                partitioning="hive").to_table().to_pandas()
+            assert sorted(segs["seg_id"].unique()) == list(
+                range(n_seg + n_app))
+            max_blocks = 0
+            for s, pdf in segs.groupby("seg_id"):
+                seg_docs = sorted(d for d, g in seg_of.items() if g == s)
+                max_blocks = max(max_blocks, check_segment(
+                    pdf, seg_docs, fields, positions))
+            assert max_blocks >= 2, (positions, fields)
 
 
 def test_segment_routing_is_one_task_per_segment(spark, documents):
-    """The pack exchange routes each segment to its OWN reduce partition:
-    _route_keys(n) must be a bijection onto partitions under Spark's real
-    hash partitioning (so _mm3_int32 must equal F.hash), and the routed
-    exchange must place exactly one segment per non-empty partition —
-    otherwise 128 segments hashed into shuffle.partitions reducers pack up
-    to 1.5× the mean into one task (measured; the round-5 scaling gap)."""
+    """The build/append exchange (routed_segment_groupby) routes each
+    segment to its OWN reduce partition: _route_keys(n) must be a bijection
+    onto partitions under Spark's real hash partitioning (so _mm3_int32
+    must equal F.hash), and the routed exchange must place exactly one
+    segment per non-empty partition — otherwise 128 segments hashed into
+    shuffle.partitions reducers pack up to 1.5× the mean into one task
+    (measured; the round-5 scaling gap)."""
     from pyspark.sql import functions as SF
 
     from ee_outliers_spark.index.build import (
-        _mm3_int32, _route_keys, _routed_by_segment)
+        _mm3_int32, _route_keys, routed_segment_groupby)
 
     # 1. the python murmur3 IS Spark's F.hash on int32
     vals = list(range(-5, 200)) + [2**31 - 1, -2**31, 123456789]
@@ -638,7 +693,7 @@ def test_segment_routing_is_one_task_per_segment(spark, documents):
         return pd.DataFrame({"seg_id": [int(pdf["seg_id"].iloc[0])],
                              "uniq": [int(pdf["seg_id"].nunique())]})
 
-    rows = _routed_by_segment(src, n_seg).applyInPandas(
+    rows = routed_segment_groupby(src, list(range(n_seg))).applyInPandas(
         seg_of, "seg_id int, uniq int").collect()
     assert sorted(r["seg_id"] for r in rows) == list(range(n_seg))
     assert all(r["uniq"] == 1 for r in rows)
