@@ -537,41 +537,69 @@ def term_matcher(spec):
                       and levenshtein_py(t, tok) <= m)
 
 
-def _read_segment(fs, seg_dir: str, rows: SegmentRows) -> pd.DataFrame:
-    """One segment's ``rows`` as a pandas frame, read with pyarrow straight
-    from its partition directory: the term filter is a parquet dataset
-    predicate; pattern atoms first read the segment's term column and add
-    the dictionary terms their matchers accept."""
+def read_dictionary(fs, directory: str, columns, terms=(), patterns=(),
+                    null_term: bool = False) -> pd.DataFrame:
+    """Rows of the parquet files directly under ``directory`` (a segment's
+    ``seg_id=N/`` or ``termstats.parquet/``; ``_SUCCESS`` and dot files are
+    skipped) whose ``term`` is in ``terms`` or is accepted by one of the
+    ``term_matcher`` specs in ``patterns``, plus the NULL-term sidecar row
+    when ``null_term``, read with pyarrow through ``fs``. Pattern specs
+    first read the term column and add the terms they accept; the term
+    filter is a parquet dataset predicate. A requested column the files
+    lack (e.g. ``block_pos_ends`` before it existed) reads as None."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
     import pyarrow.fs as pafs
 
-    cols = ["term", *rows.columns]
     files = [f.path for f in fs.get_file_info(
-                 pafs.FileSelector(seg_dir, allow_not_found=True))
+                 pafs.FileSelector(directory, allow_not_found=True))
              if f.type == pafs.FileType.File
              and f.base_name.endswith(".parquet")
              and not f.base_name.startswith((".", "_"))]
     if not files:
-        return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
+        return pd.DataFrame({c: pd.Series(dtype=object) for c in columns})
     data = pads.dataset(files, format="parquet", filesystem=fs)
-    terms = set(rows.terms)
-    if rows.patterns:
-        matchers = [term_matcher(s) for s in rows.patterns]
+    terms = set(terms)
+    if patterns:
+        matchers = [term_matcher(s) for s in patterns]
         names = data.to_table(columns=["term"]).column("term").unique()
         terms.update(t for t in names.to_pylist()
                      if t is not None and any(m(t) for m in matchers))
     pred = pc.field("term").isin(pa.array(sorted(terms), pa.string()))
-    if rows.doclen:
+    if null_term:
         pred = pred | pc.field("term").is_null()
     have = set(data.schema.names)
-    pdf = data.to_table(columns=[c for c in cols if c in have],
+    pdf = data.to_table(columns=[c for c in columns if c in have],
                         filter=pred).to_pandas()
-    for c in cols:
+    for c in columns:
         if c not in have:
             pdf[c] = None
     return pdf
+
+
+def index_fs(path: str):
+    """(pyarrow filesystem, path inside it) of an index path: a filesystem
+    URI, or a local path made absolute (executors resolve it regardless of
+    their cwd)."""
+    import pyarrow.fs as pafs
+
+    return pafs.FileSystem.from_uri(
+        path if "://" in path else os.path.abspath(path))
+
+
+def local_frame(spark: SparkSession, pdf: pd.DataFrame,
+                schema: str) -> DataFrame:
+    """A driver-side result as a local relation: the Arrow conversion plans
+    to a ``LocalTableScan``, so neither creating nor collecting it runs a
+    Spark job (``createDataFrame`` of a Python list runs one, even for no
+    rows). An empty pandas frame would take the job path too; it becomes a
+    one-row relation that ``limit(0)`` folds into an empty one."""
+    if pdf.empty:
+        names = [c.split()[0] for c in schema.split(",")]
+        pdf = pd.DataFrame({c: [None] for c in names})
+        return spark.createDataFrame(pdf, schema).limit(0)
+    return spark.createDataFrame(pdf, schema)
 
 
 def segment_map(spark: SparkSession, paths: IndexPaths, rows: SegmentRows,
@@ -585,26 +613,26 @@ def segment_map(spark: SparkSession, paths: IndexPaths, rows: SegmentRows,
     exchange. Only the commit point's live ids are read: dead directories
     that a merge has not yet collected are never listed, and an index
     with no committed stats has no visible segments."""
-    import pyarrow.fs as pafs
-
     live = live_seg_ids(load_stats(paths))
     if not live:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, pd.DataFrame(), schema)
     # a filesystem URI, or an absolute local path: executors resolve it
     # regardless of their cwd
     root = paths.segments
     if "://" not in root:
         root = os.path.abspath(root)
+    cols = ("term", *rows.columns)
 
     # named for the plan: "MapInPandas segment_stage(id)" marks an index read
     def segment_stage(batches: Iterator[pd.DataFrame]
                       ) -> Iterator[pd.DataFrame]:
-        fs, base = pafs.FileSystem.from_uri(root)
+        fs, base = index_fs(root)
         for batch in batches:
             for i in batch["id"]:
                 seg = live[int(i)]
-                out = kernel(seg, _read_segment(
-                    fs, f"{base}/seg_id={seg}", rows))
+                out = kernel(seg, read_dictionary(
+                    fs, f"{base}/seg_id={seg}", cols, rows.terms,
+                    rows.patterns, rows.doclen))
                 if len(out):
                     yield out
 

@@ -41,7 +41,9 @@ from ..queryparser import (
     to_spark_predicate, wildcard_key,
 )
 from ..tokenizer import tokenize_py
-from .build import IndexPaths, SegmentRows, segment_map, term_matcher
+from .build import (
+    IndexPaths, SegmentRows, local_frame, segment_map, term_matcher,
+)
 from .codec import varbyte_decode
 
 MATCH_COL = "_matched_terms"
@@ -152,11 +154,13 @@ def _phrase_markers(
     resolved by position-list intersection in the positional index. None when
     no phrase can match anything (empty list, or all phrases contain a
     zero-df token)."""
-    from .query import _phrase_hits
+    from .query import _phrase_hits, _termstats_lookup
 
+    dfs = _termstats_lookup(paths, sorted({t for _, ts, _ in phrases
+                                           for t in ts}))
     parts = []
     for key, toks, slop in phrases:
-        hits = _phrase_hits(spark, paths, toks, slop)
+        hits = _phrase_hits(spark, paths, toks, slop, dfs)
         if hits is not None:
             parts.append(hits.select(
                 "doc_id", F.lit(key).alias("__phrase")))
@@ -465,7 +469,7 @@ def matching_ids(spark: SparkSession, paths: IndexPaths, node,
     out_schema = "cnt long" if count_only else "doc_id long"
     if not (needs_universe or need_terms or valid_specs):
         # no atoms at all and no universe need: nothing can match
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, pd.DataFrame(), out_schema)
     cols = ("doc_blob",)
     if phrases:
         cols += ("tf_blob", "pos_blob", "block_pos_ends")

@@ -65,16 +65,19 @@ from ee_outliers_spark.index.query import (  # noqa: E402
 sections.append((
     "Index-backed phrase query (positional postings)",
     "the phrase's distinct terms + the NULL sidecar rows are the ONLY rows "
-    "read (term IN pushdown on segments.parquet); position-list intersection "
-    "in the per-segment kernel; the documents table appears NOWHERE in this "
-    "plan — the round-2 full-corpus re-tokenize is gone",
+    "each segment task reads; position-list intersection in the "
+    "per-segment kernel, run when phrase_topk_wand is called; the driver "
+    "merge leaves the result's LocalTableScan — the documents table "
+    "appears nowhere",
     phrase_topk_wand(spark, paths, "key order", 10),
 ))
 sections.append((
     "Mixed query_string top-k (terms + quoted phrase)",
-    "term contributions decoded from posting lists, phrase contributions "
-    "from positional blobs, unioned + hash-aggregated per doc, TakeOrdered — "
-    "all index-side, no corpus scan",
+    "ONE segment stage, run when querystring_topk is called: per segment "
+    "the term contributions from posting lists and the phrase factors "
+    "from positional blobs, cut to the docs that can still reach the top "
+    "k; the driver merges them, so the plan shown is the result's "
+    "LocalTableScan — no corpus scan, no exchange",
     querystring_topk(spark, paths, 'customer window "key order"', 10),
 ))
 wnode = parse_query_string('cust* AND custoner~1 AND "order key"~2')

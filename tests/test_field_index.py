@@ -330,3 +330,109 @@ def test_merge_preserves_field_norms(spark, skewed_docs, tmp_path_factory):
     assert [d for d, _ in after] == [d for d, _ in before]
     for (_, a), (_, b) in zip(after, before):
         assert abs(a - b) < 1e-9
+
+
+def _brute_qs(rows, clauses, k1=1.2, b=0.75):
+    """Full BM25 ranking [(doc_id, score)] of a query_string's positive
+    clauses, by brute force over the raw rows: every dictionary term that
+    a term / wildcard / regexp / fuzzy clause names or accepts is its own
+    clause weighted by the summed boosts, phrases score their sloppy tf
+    with their own df. ``title:`` terms and phrases use the title's
+    docCount, avgdl and lengths. Clauses: ("t", term, boost),
+    ("w", fnmatch pattern, boost), ("r", regex, boost), ("f", token,
+    max_edits, boost), ("p", tokens, slop, boost, field or None)."""
+    import fnmatch
+    import re
+
+    import numpy as np
+    from reference_scorers import sloppy_tf
+
+    from ee_outliers_spark.queryparser import levenshtein_py
+
+    toks = {None: {int(r["doc_id"]): tokenize_py(r["text"]) for r in rows},
+            "title": {int(r["doc_id"]): tokenize_py(r["title"])
+                      for r in rows}}
+    norms = {None: (len(rows), sum(map(len, toks[None].values())) / len(rows))}
+    fl = [len(t) for t in toks["title"].values() if t]
+    norms["title"] = (len(fl), sum(fl) / len(fl))
+    vocab = {t for ts in toks[None].values() for t in ts}
+
+    def add_scores(total, tfs, field, boost):
+        n, avgdl = norms[field]
+        idf = math.log(1.0 + (n - len(tfs) + 0.5) / (len(tfs) + 0.5)) * boost
+        for d, tf in tfs.items():
+            dl = len(toks[field][d])
+            total[d] = total.get(d, 0.0) + idf * (tf * (k1 + 1.0)) / (
+                tf + k1 * (1.0 - b + b * dl / avgdl))
+
+    weights: dict[str, float] = {}
+    phrases = []
+    for c in clauses:
+        if c[0] == "p":
+            phrases.append(c[1:])
+            continue
+        if c[0] == "t":
+            hits = [c[1]]
+        elif c[0] == "w":
+            hits = [t for t in vocab if fnmatch.fnmatchcase(t, c[1])]
+        elif c[0] == "r":
+            hits = [t for t in vocab if re.fullmatch(c[1], t)]
+        else:
+            hits = [t for t in vocab if levenshtein_py(t, c[1]) <= c[2]]
+        for t in hits:
+            weights[t] = weights.get(t, 0.0) + c[-1]
+    total: dict[int, float] = {}
+    for term, w in weights.items():
+        field, tok = (term.split(":") if ":" in term else (None, term))
+        tfs = {d: ts.count(tok) for d, ts in toks[field].items()
+               if tok in ts}
+        add_scores(total, tfs, field, w)
+    for ptoks, slop, boost, field in phrases:
+        tfs = {}
+        for d, ts in toks[field].items():
+            plists = {t: (np.array([d]),
+                          np.array([i for i, x in enumerate(ts) if x == t]),
+                          np.array([ts.count(t)])) for t in set(ptoks)}
+            tf = sloppy_tf(plists, ptoks, d, slop)
+            if tf:
+                tfs[d] = tf
+        add_scores(total, tfs, field, boost)
+    return sorted(total.items(), key=lambda kv: (-kv[1], kv[0]))
+
+
+@pytest.mark.parametrize("qs,clauses", [
+    # a literal term also matched by two wildcards: its boosts sum
+    ("scan s* sc?n", [("t", "scan", 1.0), ("w", "s*", 1.0),
+                      ("w", "sc?n", 1.0)]),
+    ("/s[a-z]{3}/^2 spork~1 title:batch^0.5",
+     [("r", "s[a-z]{3}", 2.0), ("f", "spork", 1, 1.0),
+      ("t", "title:batch", 0.5)]),
+    # boosted sloppy phrase + a repeated-term phrase
+    ('"key order"~2^2 "batch batch"~1 window',
+     [("p", ["key", "order"], 2, 2.0, None),
+      ("p", ["batch", "batch"], 1, 1.0, None), ("t", "window", 1.0)]),
+    ('title:"key order"~1^1.5 "merge part" customer^0.5 dup',
+     [("p", ["key", "order"], 1, 1.5, "title"),
+      ("p", ["merge", "part"], 0, 1.0, None), ("t", "customer", 0.5),
+      ("t", "dup", 1.0)]),
+    # a single-token phrase scores as its term
+    ('"window" window^2 wndow~1', [("t", "window", 1.0), ("t", "window", 2.0),
+                                   ("f", "wndow", 1, 1.0)]),
+    ('/qqq.*/ nosuchterm "no such phrase" zzz* xyzzy~1', []),
+])
+def test_querystring_topk_rank_identity(qs, clauses, spark, titled_docs,
+                                        field_paths):
+    """querystring_topk ≡ brute-force BM25 over the raw corpus on a
+    4-segment positional index with an analyzed field, for k from 1 to
+    past the number of matching docs: the per-segment candidate cut and the
+    driver merge lose no doc, scores to 1e-9."""
+    assert len(load_stats(field_paths)["live_segments"]) >= 4
+    want = _brute_qs(titled_docs.select("doc_id", "text", "title").collect(),
+                     clauses)
+    assert bool(want) == bool(clauses), qs
+    for k in (1, 5, 10, 50, len(want) + 7):
+        got = [(int(r["doc_id"]), float(r["score"])) for r in
+               querystring_topk(spark, field_paths, qs, k).collect()]
+        assert [d for d, _ in got] == [d for d, _ in want[:k]], (qs, k)
+        for (_, gs), (_, ws) in zip(got, want):
+            assert math.isclose(gs, ws, rel_tol=1e-9, abs_tol=1e-12), (qs, k)

@@ -407,8 +407,9 @@ def test_vectorized_paths_match_wand_loop(spark, documents, tmp_path_factory):
     from ee_outliers_spark.index.codec import varbyte_decode
     from ee_outliers_spark.index.query import (
         _TermCursor, _and_segment, _idf, _or_segment, _single_term_segment,
-        _wand_segment, block_upper_bound,
+        block_upper_bound,
     )
+    from reference_scorers import wand_segment
 
     out = str(tmp_path_factory.mktemp("index_diff"))
     p = build_segments(spark, documents, "doc_id", "text", out, num_segments=1)
@@ -442,7 +443,7 @@ def test_vectorized_paths_match_wand_loop(spark, documents, tmp_path_factory):
         (["the", "vector"], "and", 10),
         (["customer", "window", "batch"], "and", 10),
     ]:
-        want = _wand_segment(cursors(terms), k, avgdl, mode)
+        want = wand_segment(cursors(terms), k, avgdl, mode)
         if len(terms) == 1:
             got = _single_term_segment(cursors(terms)[0], k, avgdl)
         elif mode == "and":
@@ -456,15 +457,16 @@ def test_vectorized_paths_match_wand_loop(spark, documents, tmp_path_factory):
 
 def test_phrase_seg_match_vectorized_vs_perdoc(docs_dict):
     """The vectorized cross-doc phrase kernel equals the per-doc reference
-    (_sloppy_tf / position intersection) for exact and sloppy phrases, both
+    (sloppy_tf / position intersection) for exact and sloppy phrases, both
     term orders, slop 0-5 — including the start at adjusted position -j
     whose owner attribution needs the +m shift (the bug this harness
     caught: doc-block // OFFSET went to the previous doc for negative
     in-block values)."""
     import numpy as np
 
-    from ee_outliers_spark.index.query import _phrase_seg_match, _sloppy_tf
+    from ee_outliers_spark.index.query import _phrase_seg_match
     from ee_outliers_spark.tokenizer import tokenize_py
+    from reference_scorers import sloppy_tf
 
     toks = {d: tokenize_py(t) for d, t in docs_dict.items()}
 
@@ -506,7 +508,7 @@ def test_phrase_seg_match_vectorized_vs_perdoc(docs_dict):
         want = {}
         for d in inter:
             if slop > 0:
-                tf = _sloppy_tf(pl, phrase, int(d), slop)
+                tf = sloppy_tf(pl, phrase, int(d), slop)
             else:
                 cand = None
                 for j, p in enumerate(phrase):
@@ -860,7 +862,8 @@ def test_phrase_seg_match_repeated_sloppy_randomized():
 
     import numpy as np
 
-    from ee_outliers_spark.index.query import _phrase_seg_match, _sloppy_tf
+    from ee_outliers_spark.index.query import _phrase_seg_match
+    from reference_scorers import sloppy_tf
 
     rng = random.Random(20260817)
     vocab = ["a", "b", "c"]
@@ -897,7 +900,7 @@ def test_phrase_seg_match_repeated_sloppy_randomized():
             inter = np.intersect1d(inter, plists[p][0], assume_unique=True)
         want = {}
         for d in inter:
-            tf = _sloppy_tf(plists, phrase, int(d), slop)
+            tf = sloppy_tf(plists, phrase, int(d), slop)
             if tf:
                 want[int(d)] = tf
         assert got == want, (trial, phrase, slop, toks)
@@ -952,9 +955,8 @@ def test_or_segment_lazy_decode_skips_blocks():
 
     from ee_outliers_spark.index.build import BLOCK, block_upper_bound
     from ee_outliers_spark.index.codec import encode_postings
-    from ee_outliers_spark.index.query import (
-        _TermCursor, _idf, _or_segment, _wand_segment,
-    )
+    from ee_outliers_spark.index.query import _TermCursor, _idf, _or_segment
+    from reference_scorers import wand_segment
 
     avgdl, n_docs = 50.0, 200_000
     dl_docs = np.arange(n_docs, dtype=np.int64)
@@ -990,7 +992,7 @@ def test_or_segment_lazy_decode_skips_blocks():
         got = _or_segment([mk(*a) for a in args], 10, avgdl)
     finally:
         _TermCursor._load = orig
-    want = _wand_segment([mk(*a) for a in args], 10, avgdl, "or")
+    want = wand_segment([mk(*a) for a in args], 10, avgdl, "or")
     assert [g[0] for g in got] == [w[0] for w in want]
     for (_, gs), (_, ws) in zip(got, want):
         assert abs(gs - ws) < 1e-9
@@ -1192,3 +1194,143 @@ def test_querystring_topk_mixed_matches_manual_sum(spark, documents, pos_paths):
     assert [g[0] for g in got] == [w[0] for w in want]
     for (gd, gs), (wd, ws) in zip(got, want):
         assert math.isclose(gs, ws, rel_tol=1e-9), (gd, gs, ws)
+
+
+def test_querystring_topk_pruning_keeps_phrase_bound(spark, tmp_path_factory):
+    """The per-segment cut of querystring_topk against a phrase whose true
+    df (2) is far below its terms' min df (every doc): inside a segment the
+    phrase idf is only bounded, so a phrase doc ranks last by its lower
+    bound yet first by its true score. The k-th score is a tie shared by
+    docs of every segment (the `c` docs), so each segment must ship its
+    whole tie. A segment that cut at exactly k, or by the lower bound
+    alone, would drop docs 7 and 130."""
+    from ee_outliers_spark.index.query import querystring_topk
+    from ee_outliers_spark.tokenizer import tokenize_py
+
+    rows = []
+    for d in range(240):
+        if d in (7, 130):
+            text = "a b " + " ".join(f"f{d}x{i}" for i in range(20))
+        elif d % 3 == 0:
+            text = "b a c"
+        else:
+            text = "b a"
+        rows.append((d, text))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    p = build_segments(spark, docs, "doc_id", "text",
+                       str(tmp_path_factory.mktemp("index_qs_prune")),
+                       num_segments=4, positions=True)
+    toks = {d: tokenize_py(t) for d, t in rows}
+    n = len(rows)
+    avgdl = sum(map(len, toks.values())) / n
+
+    def part(tf, dl, idf):
+        return idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
+
+    def idf(df_):
+        return math.log(1.0 + (n - df_ + 0.5) / (df_ + 0.5))
+
+    c_docs = [d for d, t in toks.items() if "c" in t]
+    scores = {d: part(1, 3, idf(len(c_docs))) for d in c_docs}
+    for d in (7, 130):
+        scores[d] = part(1, 22, idf(2))
+    want = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
+    assert [d for d, _ in want[:3]] == [7, 130, 0]
+    for k in (1, 2, 3, 5, 10, 300):
+        got = [(int(r["doc_id"]), float(r["score"])) for r in
+               querystring_topk(spark, p, 'c "a b"', k).collect()]
+        assert [d for d, _ in got] == [d for d, _ in want[:k]], k
+        for (_, gs), (_, ws) in zip(got, want):
+            assert math.isclose(gs, ws, rel_tol=1e-9), k
+
+
+def test_driver_expansion_matches_segment_expansion(pos_paths):
+    """The driver expands wildcard / regexp / fuzzy atoms over termstats
+    (``_termstats_lookup``) to exactly the terms that the per-segment
+    reads accept with the same ``term_matcher`` specs, term by term, and
+    each term's df is the sum of its per-segment df_local."""
+    from ee_outliers_spark.index.build import (
+        index_fs, live_seg_ids, load_stats, read_dictionary,
+    )
+    from ee_outliers_spark.index.filter import regexp_spec, wildcard_spec
+    from ee_outliers_spark.index.query import _termstats_lookup
+
+    fs, base = index_fs(pos_paths.segments)
+    live = live_seg_ids(load_stats(pos_paths))
+    for spec in [wildcard_spec("s*"), wildcard_spec("w?nd*"),
+                 regexp_spec("[a-c].*"), regexp_spec("s[a-z]{3}"),
+                 ("lev", "sorr", 1), ("lev", "wndow", 2),
+                 wildcard_spec("zz*")]:
+        driver = _termstats_lookup(pos_paths, [], [spec])
+        seg: dict[str, int] = {}
+        for s in live:
+            pdf = read_dictionary(fs, f"{base}/seg_id={s}",
+                                  ("term", "df_local"), patterns=[spec])
+            for t, d in zip(pdf["term"], pdf["df_local"]):
+                seg[t] = seg.get(t, 0) + int(d)
+        assert driver == seg, spec
+    assert _termstats_lookup(pos_paths, [], [wildcard_spec("s*")])
+
+
+def test_termstats_lookup_through_file_uri(pos_paths, tmp_path):
+    """termstats reads go through the filesystem a path or URI names
+    (pyarrow.fs), not a local glob: a file:// URI gives the same dfs, and
+    `_SUCCESS`, dot and underscore files beside the parquet parts are
+    ignored."""
+    import shutil
+
+    from ee_outliers_spark.index.build import IndexPaths
+    from ee_outliers_spark.index.filter import wildcard_spec
+    from ee_outliers_spark.index.query import _termstats_lookup
+
+    shutil.copytree(pos_paths.termstats, tmp_path / "termstats.parquet")
+    for junk in ("_SUCCESS", ".part-0.parquet.crc", "_tmp.parquet",
+                 ".hidden.parquet"):
+        (tmp_path / "termstats.parquet" / junk).write_bytes(b"not parquet")
+    uri = IndexPaths("file://" + str(tmp_path))
+    terms = ["customer", "window", "nosuchterm", "key"]
+    want = _termstats_lookup(pos_paths, terms)
+    assert want and "nosuchterm" not in want
+    assert _termstats_lookup(uri, terms) == want
+    spec = [wildcard_spec("s*")]
+    assert (_termstats_lookup(uri, [], spec)
+            == _termstats_lookup(pos_paths, [], spec))
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, read from its status-tracker job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_query_job_counts(spark, documents, pos_paths):
+    """query_string and phrase top-k run ONE Spark job per call (segment
+    stage + driver merge into a local relation), search_topk with a phrase
+    atom at most five, and a result known empty on the driver none."""
+    from ee_outliers_spark.index.query import (
+        phrase_topk_wand, querystring_topk, search_topk,
+    )
+
+    cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    assert _job_count(spark, lambda: querystring_topk(
+        spark, pos_paths, '"key order"~2 s* window^2', 10).collect()) == 1
+    assert _job_count(spark, lambda: phrase_topk_wand(
+        spark, pos_paths, "key order", 10).collect()) == 1
+    assert _job_count(spark, lambda: search_topk(
+        spark, pos_paths, documents, "doc_id", "text",
+        '(window OR "key order"~1) AND lang:en', 10, cols).collect()) <= 5
+    assert _job_count(spark, lambda: querystring_topk(
+        spark, pos_paths, 'nosuchterm "no such"', 10).collect()) == 0
+    assert _job_count(spark, lambda: phrase_topk_wand(
+        spark, pos_paths, "no such", 10).collect()) == 0
